@@ -87,9 +87,11 @@ def silver_transform_observed(bronze: DataFrame,
     ETL/…ipynb:700, 1251; Observation is the Spark-native way to get
     those numbers for free).
 
-    Metrics: rows in, rows surviving the parse (non-null ``year``),
-    and how many rows carried a repaired/truncated body that still
-    parsed. Read ``observation.get`` AFTER an action has run.
+    Metrics, all over the rows the silver frame emits:
+    ``rows_out`` (rows that survived the null-drop on ``year``),
+    ``null_year_rows`` (of those, rows whose ``year`` then failed the
+    int try-cast and is NULL), ``min_year`` and ``max_year``. Read
+    ``observation.get`` AFTER an action has run.
     """
     from pyspark.sql import Observation
 

@@ -113,18 +113,16 @@ def envelope_silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders GROUP BY o_orderstatus
     """,
     doc="The reference's ACTUAL bronze wire format under the oracle "
-        "gate: orders → JSON-in-binary envelope → written as an Avro "
-        "OBJECT CONTAINER FILE (native spark-avro when the jar is on "
-        "the classpath, else the pure-Python OCF DataSource "
-        "sources/avro_ocf.py — deflate blocks, schema-in-header, "
-        "one file per write task) → scanned back (one partition per "
-        "container file) → decode + from_json + try_cast → aggregate. "
-        "The roundtrip is an identity on the payload, so the oracle "
-        "computes the same aggregate straight from orders — any codec "
-        "or schema-mapping defect breaks the match. Un-gates VERDICT "
-        "r8 missing #1 (ETL/flight-silver-transformation ipynb:574-578 "
-        "reads Event Hubs Capture avro; this path was parquet-only "
-        "in jar-less containers until round 9).",
+        "gate: orders → JSON-in-binary envelope → written as Avro "
+        "OBJECT CONTAINER FILES by Spark's JVM AvroFileFormat (the "
+        "avro short name when spark-avro registers it, else the class "
+        "name pyspark ships in spark-sql core; deflate, 1 MiB blocks, "
+        "one file per write task) → FileScan avro → decode + from_json "
+        "+ try_cast → aggregate. The roundtrip is an identity on the "
+        "payload, so the oracle computes the same aggregate straight "
+        "from orders — any codec or schema-mapping defect breaks the "
+        "match (ETL/flight-silver-transformation ipynb:574-578 reads "
+        "Event Hubs Capture avro).",
 )
 def avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
@@ -146,7 +144,7 @@ def avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disjoint paths; mode=overwrite per call, removed at exit
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_avro_{app}_{tag}")
+    path = os.path.join(tempfile.gettempdir(), f"avro_bronze_{app}_{tag}")
     cleanup_at_exit(path)
     write_envelope_bronze(env, path, fmt="avro")
     bronze = read_envelope_bronze(spark, path, fmt="avro")

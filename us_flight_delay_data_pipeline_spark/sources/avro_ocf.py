@@ -1,32 +1,15 @@
-"""Pure-Python Avro Object Container File codec + a Spark 4 Python
-DataSource (``sg_avro``) built on it.
+"""Pure-Python Avro Object Container File codec.
 
-Why this exists: the reference's bronze layer IS Avro — Event Hubs
-Capture files (README.md:114-131; ETL/flight-silver-transformation
-(1).ipynb:574-578 reads them with ``format("avro")``) — but the
-spark-avro DATASOURCE is a separate artifact not bundled with pip
-pyspark, so since round 1 the bronze envelope fell back to parquet in
-this container and the reference's actual wire format was never read
-end-to-end (VERDICT r8 "what's missing" #1). The Avro Object
-Container File format itself is a small public spec
+The reference's bronze layer is Avro — Event Hubs Capture files
+(README.md:114-131; ETL/flight-silver-transformation (1).ipynb:574-578
+reads them with ``format("avro")``). The engine writes and reads them
+through Spark's JVM ``AvroFileFormat`` (``sources/envelope.py``); this
+module is an independent implementation of the same small public spec
 (https://avro.apache.org/docs/1.11.1/specification/ — magic
 ``Obj\\x01``, metadata map carrying the writer schema JSON + codec,
 16-byte sync-marker-delimited blocks of binary-encoded records), so
-this module implements the codec directly and exposes it through the
-same Spark 4 ``pyspark.sql.datasource`` extension surface as
-``pyds.py``:
-
-- reader: one ``InputPartition`` per ``.avro`` file — a directory of
-  N capture files scans with N parallel Python tasks; the schema is
-  read from the first file's OCF header on the driver (metadata-scale)
-  and mapped to Spark DDL.
-- writer: full batch-write contract (``DataSourceWriter``) — each
-  executor task encodes its row iterator into one container file and
-  returns the filename as its commit message; the driver-side
-  ``commit`` publishes a ``_SUCCESS`` manifest listing exactly the
-  committed files and ``abort`` removes the task outputs (the same
-  all-or-nothing file-listing contract a JVM FileCommitProtocol
-  provides).
+the tests can decode the bytes the JVM writes, and hand the JVM reader
+files it did not write, without trusting Spark to check itself.
 
 Codec subset (everything the envelope schema and Event Hubs Capture
 emit): ``null boolean int long float double bytes string``, records,
@@ -34,36 +17,23 @@ emit): ``null boolean int long float double bytes string``, records,
 type; codecs ``null`` and ``deflate`` (raw RFC-1951, the two the spec
 requires). Arrays/maps/enums/fixed are rejected loudly rather than
 half-supported.
-
-Scale notes: a Python source is the SLOW path relative to a JVM scan
-(no codegen, no vectorized decode) — when the spark-avro jar IS on
-the classpath ``sources/envelope.py`` picks the native path and this
-module never runs. Its job is making the avro branch *exercised* (and
-byte-parity-tested against real container files) in jar-less
-environments, with file-level parallelism preserved.
 """
 
 from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import uuid
 import zlib
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import (DataSource, DataSourceReader,
-                                    DataSourceWriter, InputPartition,
-                                    WriterCommitMessage)
 
 __all__ = [
-    "AvroOcfDataSource", "read_ocf_file", "write_ocf_file",
-    "avro_schema_for", "ddl_for_avro_schema",
+    "read_ocf_file", "write_ocf_file", "avro_schema_for",
+    "ddl_for_avro_schema",
 ]
 
 _MAGIC = b"Obj\x01"
-_EPOCH = None  # lazy: datetime import kept out of executor hot loop
+_EPOCH = None  # lazy: set on the first timestamp
 
 
 # ------------------------------------------------------------------ #
@@ -331,12 +301,6 @@ def read_ocf_file(path: str):
             yield dec(br)
 
 
-def read_ocf_schema(path: str) -> dict:
-    with open(path, "rb") as fh:
-        schema, _, _, _ = _read_header(fh)
-    return schema
-
-
 # ------------------------------------------------------------------ #
 # Spark type mapping                                                 #
 # ------------------------------------------------------------------ #
@@ -364,7 +328,7 @@ def avro_schema_for(spark_schema) -> dict:
         elif tn in _SPARK_TO_AVRO:
             at = _SPARK_TO_AVRO[tn]
         else:
-            raise ValueError(f"sg_avro cannot write {tn} column "
+            raise ValueError(f"avro_ocf cannot write {tn} column "
                              f"{f.name!r}")
         fields.append({"name": f.name,
                        "type": ["null", at] if f.nullable else at})
@@ -383,101 +347,9 @@ def _avro_field_ddl(t) -> str:
         return _avro_field_ddl(t["type"])
     if t in _AVRO_TO_DDL:
         return _AVRO_TO_DDL[t]
-    raise ValueError(f"sg_avro cannot read avro type {t!r}")
+    raise ValueError(f"avro_ocf cannot read avro type {t!r}")
 
 
 def ddl_for_avro_schema(schema: dict) -> str:
     return ", ".join(f"{f['name']} {_avro_field_ddl(f['type'])}"
                      for f in schema["fields"])
-
-
-# ------------------------------------------------------------------ #
-# DataSource                                                         #
-# ------------------------------------------------------------------ #
-
-def _list_avro(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f) for f in os.listdir(path)
-        if f.endswith(".avro") and not f.startswith(("_", ".")))
-
-
-class _OcfBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sg_avro requires option 'path'")
-
-    def partitions(self):
-        # driver-side listing only — one partition per container file,
-        # the same scan-parallelism contract as a JVM FileScan
-        return [InputPartition(p) for p in _list_avro(self.path)]
-
-    def read(self, partition):
-        yield from read_ocf_file(partition.value)
-
-
-@dataclass
-class _OcfCommit(WriterCommitMessage):
-    filename: str = ""
-    rows: int = 0
-
-
-class _OcfBatchWriter(DataSourceWriter):
-    def __init__(self, options, schema, overwrite):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sg_avro requires option 'path'")
-        self.avro_schema = avro_schema_for(schema)
-        self.codec = options.get("codec", "deflate")
-        if overwrite:
-            for p in _list_avro(self.path) if os.path.isdir(self.path) \
-                    else []:
-                os.remove(p)
-        os.makedirs(self.path, exist_ok=True)
-
-    def write(self, iterator):
-        name = f"part-{uuid.uuid4().hex}.avro"
-        full = os.path.join(self.path, name)
-        n = write_ocf_file(full, self.avro_schema,
-                           (tuple(row) for row in iterator),
-                           codec=self.codec)
-        return _OcfCommit(filename=name, rows=n)
-
-    def commit(self, messages):
-        # all-or-nothing publish: the manifest lists exactly the files
-        # this job committed (readers of partial dirs see no _SUCCESS)
-        files = [m.filename for m in messages if m is not None]
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as fh:
-            json.dump({"files": files}, fh)
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None:
-                try:
-                    os.remove(os.path.join(self.path, m.filename))
-                except OSError:
-                    pass
-
-
-class AvroOcfDataSource(DataSource):
-    """``spark.dataSource.register(AvroOcfDataSource)`` then
-    ``spark.read.format("sg_avro").option("path", d).load()`` /
-    ``df.write.format("sg_avro").option("path", d).mode(...).save()``.
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "sg_avro"
-
-    def schema(self) -> str:
-        files = _list_avro(self.options["path"])
-        if not files:
-            raise ValueError(f"no .avro files under "
-                             f"{self.options['path']!r}")
-        return ddl_for_avro_schema(read_ocf_schema(files[0]))
-
-    def reader(self, schema):
-        return _OcfBatchReader(self.options)
-
-    def writer(self, schema, overwrite):
-        return _OcfBatchWriter(self.options, schema, overwrite)
