@@ -17,11 +17,10 @@ import datetime
 import glob
 import io
 import json
-import re
 import zlib
 
 import pytest
-from pyspark.errors import AnalysisException
+from py4j.protocol import Py4JJavaError
 
 from us_flight_delay_data_pipeline_spark.plans.silver import silver_transform
 from us_flight_delay_data_pipeline_spark.sources import envelope
@@ -29,7 +28,6 @@ from us_flight_delay_data_pipeline_spark.sources.avro_ocf import (
     _encoder, _read_header, _Reader, avro_schema_for, ddl_for_avro_schema,
     read_ocf_file, write_ocf_file)
 from us_flight_delay_data_pipeline_spark.sources.envelope import (
-    avro_available,
     decode_envelope,
     encode_envelope,
     read_envelope_bronze,
@@ -100,26 +98,16 @@ def test_avro_roundtrip_always_runs(spark, tmp_path):
 
 
 def test_default_format_matches_probe(spark, tmp_path):
-    """fmt=None writes Avro iff the ``avro`` short name is registered,
-    else parquet; the probe agrees with Spark's own resolution of that
-    name, and only one of the two formats lands."""
+    """The default format is Avro through the JVM class: only ``.avro``
+    part files land, and the default read returns the body written."""
     src = spark.createDataFrame([(1, "x")], "id int, v string")
     env = encode_envelope(src, produced_at=False)
     path = str(tmp_path / "bronze_default")
     write_envelope_bronze(env, path)
     back = read_envelope_bronze(spark, path)
     assert [r["body"] for r in back.collect()] == [b'{"id":1,"v":"x"}']
-    try:
-        spark.read.format("avro").schema(ENVELOPE_DDL).load(path)
-        registered = True
-    except AnalysisException as e:
-        assert "avro" in str(e).lower()
-        registered = False
-    assert avro_available(spark) is registered
-    avro_files = glob.glob(path + "/*.avro")
-    parquet_files = glob.glob(path + "/*.parquet")
-    assert (len(avro_files) > 0, len(parquet_files) > 0) == (
-        registered, not registered)
+    parts = glob.glob(path + "/part-*")
+    assert parts and all(f.endswith(".avro") for f in parts), parts
 
 
 def test_ocf_golden_bytes_match_spec():
@@ -284,8 +272,12 @@ def test_silver_scans_avro_on_the_jvm(spark, tmp_path):
 
 
 def test_unresolvable_avro_class_is_named(spark, tmp_path, monkeypatch):
+    """A missing Avro class fails loudly with Spark's own
+    DATA_SOURCE_NOT_FOUND error naming the class, not a silent
+    fallback to another format."""
     missing = "org.apache.spark.sql.avro.NoSuchFileFormat"
     monkeypatch.setattr(envelope, "AVRO_FILE_FORMAT", missing)
-    monkeypatch.setattr(envelope, "avro_available", lambda spark: False)
-    with pytest.raises(RuntimeError, match=re.escape(missing)):
+    with pytest.raises(Py4JJavaError) as ei:
         read_envelope_bronze(spark, str(tmp_path), fmt="avro")
+    msg = str(ei.value)
+    assert "DATA_SOURCE_NOT_FOUND" in msg and missing in msg, msg

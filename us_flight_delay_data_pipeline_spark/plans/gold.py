@@ -138,28 +138,6 @@ def gold_master(silver_kpi: DataFrame) -> DataFrame:
     return silver_kpi.select(*ddl_order)
 
 
-def agg_multigrain(silver_kpi: DataFrame) -> DataFrame:
-    """[OPT] carrier + monthly + overall grains in ONE shuffle via
-    GROUPING SETS — the rewrite SURVEY.md §2.4/§4 flags: the three gold
-    grains are exactly ``GROUPING SETS ((carrier,carrier_name,year,
-    month),(year,month),())``. At 100 TB this replaces three scans +
-    three shuffles with one of each. ``grouping_id()`` disambiguates
-    the grain."""
-    sets = ("(carrier, carrier_name, year, month), (year, month), ()")
-    silver_kpi.createOrReplaceTempView("_silver_kpi_mg")
-    return silver_kpi.sparkSession.sql(f"""
-        SELECT carrier, carrier_name, year, month,
-               grouping_id() AS grain_id,
-               sum(arr_flights) AS total_arr_flights,
-               sum(arr_del15) AS total_arr_del15,
-               sum(arr_delay) AS total_arr_delay_minutes,
-               sum(arr_cancelled) AS total_arr_cancelled,
-               sum(arr_diverted) AS total_arr_diverted
-        FROM _silver_kpi_mg
-        GROUP BY GROUPING SETS ({sets})
-    """)
-
-
 def write_gold(df: DataFrame, path: str) -> None:
     """Partitioned parquet sink, same spec as the reference
     (README.md:217): partitionBy(carrier, year, month) → partition

@@ -53,8 +53,11 @@ no decimal128/256, no int128, on EITHER side.
 from __future__ import annotations
 
 import dataclasses
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -103,239 +106,33 @@ AUDIT_QUERIES = frozenset({
 })
 
 
-# Union of query names that already have a driver-side CORRECTNESS row
-# (CORRECTNESS_r01..r04.json).  The driver's oracle sample is the first
-# 50 registered names, so ``load_registry`` orders never-checked names
-# first until every query has external correctness evidence
-# (VERDICT r4, next-round task #1).
-DRIVER_CHECKED_R01_R04 = frozenset({
-    'ann_bruteforce_topk', 'ann_lsh_topk', 'asof_latest_order',
-    'bigram_collocations', 'bitext_margin_pairs', 'boilerplate_shingles',
-    'bpe_encode_docs', 'bpe_merges', 'chi2_drift_audit',
-    'chunk_dup_ratio', 'cluster_aware_folds', 'cube_flags',
-    'customer_order_stats', 'customer_running_total', 'customers_with_open_orders',
-    'customers_without_orders', 'date_funcs', 'decontamination_overlap',
-    'dedup_clusters', 'dedup_clusters_star', 'dedup_exact',
-    'deterministic_sample', 'doc_chunks', 'doc_commonness',
-    'doc_fingerprints', 'doc_repetition_stats', 'dup_cluster_size_histogram',
-    'dup_degree_histogram', 'dup_span_stats', 'embedding_neardup_pairs',
-    'envelope_silver_roundtrip', 'event_type_users', 'events_hourly',
-    'events_json_props', 'filtered_projection', 'flag_shares',
-    'hashed_doc_vectors', 'kcenter_coreset', 'knn_graph_mutual',
-    'knn_semantic_clusters', 'lang_id_confusion', 'master_derive',
-    'math_funcs', 'minhash_lsh_pairs', 'minhash_signatures',
-    'mixture_rebalance', 'monthly_trend', 'monthly_trend_rates',
-    'multigrain_flags', 'negative_sampling_table', 'ngram_jaccard_pairs',
-    'nn_descent_round', 'order_value_lag_delta', 'overall_kpis',
-    'pack_sequences', 'pii_scrub_stats', 'price_band_orders',
-    'quality_by_source', 'quality_weighted_sample', 'region_revenue',
-    'rollup_brand_size', 'segment_sales', 'setop_except_all',
-    'setop_intersect', 'setop_union_distinct', 'simhash_docs',
-    'simhash_dup_pairs', 'sorted_neighborhood_pairs', 'split_leakage_audit',
-    'stopword_scrub', 'string_funcs', 'substring_dedup',
-    'text_stats', 'tfidf_top_terms', 'tokenizer_fertility',
-    'top_parts_per_brand', 'top_suppliers', 'topk_orders',
-    'vocab_coverage', 'winnow_candidate_pairs', 'winnowing_fingerprints',
-})
+# Correctness evidence: one CORRECTNESS_rNN.json per round of the
+# external 50-query oracle sample (r01-r07 under records/, later rounds
+# at the repo root), each mapping query name -> match flags and ``err``.
+_REPO = Path(__file__).resolve().parents[2]
+_EVIDENCE_DIRS = (_REPO / "records", _REPO)
+_EVIDENCE_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# The 50 names the round-5 driver sample will draw (the first 50 of
-# the never-checked ordering, snapshotted when the rotation landed).
-# Pinning them FIRST keeps the sample stable even if more queries are
-# registered later in the round.  All 50 r05 names got CORRECTNESS_r05
-# rows (48 green; mergeable_partial_aggs fixed this round,
-# hll_partition_merge split into a checkable exact twin), so they are
-# folded into DRIVER_CHECKED_R01_R05 below and the NEXT 50
-# never-checked names are pinned here.  The two rows-only queries
-# (media_image_features, approx_distinct_and_quantiles — sketch/UDF
-# outputs that are not cross-engine-portable) are EXCLUDED so no
-# driver-sample slot burns on a no_oracle row; their checkable exact
-# twins (hll_partition_merge_exact, distinct_and_quantiles_exact)
-# take the last two slots instead.  Round 7: fold these into the
-# checked set; 35 names remain (24 never-checked from r5 incl. the
-# re-queued month_spine_fill, the 8 queries registered in r6 —
-# retrieval family incl. the on-disk index, its streaming twin and
-# phrase search, temperature mixture, k-anonymity — + the 2
-# rows-only).
-# Round-8 prep (write the r8 pin from this recipe once
-# CORRECTNESS_r07 lands): fold DRIVER_SAMPLE_R07 + the 14 r7-
-# registered names (wave-7 family, phrase/proximity/compaction
-# twins, cusum, media exact twin) into the checked set; re-queue any
-# red r07 row at the front of DRIVER_SAMPLE_R08. If the r7 sample is
-# all green, driver union reaches every checkable name (226 of 228;
-# media_image_features + approx_distinct_and_quantiles are rows-only
-# by declared design, and both now have driver-green exact twins) —
-# from r8 on, the sample is pure re-confirmation + new registrations.
-
-# Round-7 pinned sample: the ONE red r06 row re-queued first (the
-# decimal-end-to-end fix landed this round: zero doubles survive in
-# the output — revenue/qty are DECIMAL(38,6) on both engine and
-# oracle sides, so no engine-dependent decimal->double conversion
-# remains anywhere in the query), followed by ALL 33 checkable
-# never-checked names (VERDICT r6 task #2: 33 < 50, the whole
-# remainder fits in one round -> driver union reaches 213/215, the
-# other 2 rows-only by declared design).  Slots 35-50 fall to this
-# round's new registrations, which sort ahead of already-checked
-# names in load_registry.
-# Round-9 prep (write the r9 pin from this recipe once
-# CORRECTNESS_r08 lands): fold the 50 r8-sampled names (the 13 reds
-# + the 7 r8 registrations + the 30 oldest-green re-confirmations)
-# into a DRIVER_CHECKED_R08 set with round stamp 8 in last_checked;
-# re-queue any red r08 row at the front of DRIVER_SAMPLE_R09; the
-# rest of the sample self-fills with r9 registrations then the next
-# 30 stalest rows (the name-keyed sort makes slot math insensitive
-# to registration order).
-#
-# Round-8 pinned sample head: the 13 r7-red rows re-queued first
-# (VERDICT r7 task #1 done-criterion is a green r08 row for each).
-# All 13 were hash_match=False for ONE mechanical cause — DuckDB
-# SUM(<integer>) returns HUGEINT (int128), float64 through the
-# driver's pandas fetch — fixed this round by CAST(... AS BIGINT) on
-# the 17 offending oracle columns (Spark side untouched; the judge's
-# three-session repro already proved it bit-exact). Slots 14+ fall to
-# this round's new registrations (never-checked names sort ahead of
-# checked ones), then to the OLDEST-green rows (r01-r04-checked,
-# re-confirmation rotation) — all 228 queries have at least one
-# driver row, so the sample is now re-queue + new + re-confirm.
-# Every name that got a CORRECTNESS_r08 row (all 50 green — the 13
-# former r7 reds, the 21 r8-wave registrations, and the oldest-green
-# re-confirmations that filled the remaining slots). Round stamp 8 in
-# last_checked; with zero red r08 rows there is NO pinned r9 head —
-# the r9 sample self-fills with this round's registrations (never-
-# checked tier) followed by the 50 STALEST green rows, per the r9
-# recipe (git log 456770c).
-DRIVER_CHECKED_R08 = frozenset({
-    'ann_beam_search_topk', 'ann_bruteforce_topk', 'ann_lsh_topk',
-    'asof_latest_order', 'basket_association_rules',
-    'bigram_collocations', 'bitext_margin_pairs', 'bitwise_funcs',
-    'blocking_quality_audit', 'boilerplate_shingles', 'bpe_encode_docs',
-    'bpe_merges', 'chi2_drift_audit', 'chunk_dup_ratio',
-    'cluster_aware_folds', 'consistent_hash_rebalance',
-    'copurchase_clustering_coeff', 'cross_encoder_rerank', 'cube_flags',
-    'customer_order_stats', 'customer_running_total',
-    'customers_with_open_orders', 'customers_without_orders',
-    'cusum_changepoints', 'dedup_effective_size', 'epoch_shuffle_plan',
-    'equi_depth_binning', 'fuzzy_name_blocking', 'group_mad_outliers',
-    'interval_union_coverage', 'largest_remainder_quota', 'map_funcs',
-    'mergeable_partial_aggs', 'multi_touch_attribution',
-    'nucleus_topp_docs', 'pareto_frontier_docs',
-    'priority_linestatus_counts', 'regex_funcs', 'scd2_history_intervals',
-    'score_decile_lift', 'source_ngram_overlap_matrix',
-    'stream_gdpr_tombstones_gated', 'stream_minhash_index_gated',
-    'substring_dup_pairs', 'systematic_pps_sample',
-    'temperature_mixture_weights', 'template_dedup_clusters',
-    'time_decay_user_value', 'zonemap_pruning_audit',
-    'zorder_layout_audit',
-})
-
-DRIVER_SAMPLE_R08 = (
-    'mergeable_partial_aggs', 'bitwise_funcs', 'map_funcs',
-    'priority_linestatus_counts', 'regex_funcs',
-    'temperature_mixture_weights', 'zonemap_pruning_audit',
-    'zorder_layout_audit', 'epoch_shuffle_plan', 'equi_depth_binning',
-    'multi_touch_attribution', 'fuzzy_name_blocking',
-    'cusum_changepoints',
-)
-
-# Every name that got a CORRECTNESS_r07 row (the 34 pinned below plus
-# the 16 r7 registrations that took slots 35-50).
-DRIVER_CHECKED_R07 = frozenset({
-    'mergeable_partial_aggs', 'array_funcs', 'bitwise_funcs',
-    'bm25_index_probe', 'bm25_topk', 'cdc_latest_state',
-    'conditional_funcs', 'customer_order_histogram',
-    'discount_band_revenue', 'dormant_rich_customers',
-    'heavy_shipper_suppliers', 'hybrid_rrf_topk', 'k_anonymity_audit',
-    'listagg_funcs', 'map_funcs', 'month_spine_fill',
-    'nation_market_share', 'order_priority_exists',
-    'phrase_search_top_bigram', 'pivot_event_counts',
-    'point_in_time_join', 'priority_linestatus_counts',
-    'product_type_profit', 'props_variant_extract', 'regex_funcs',
-    'retriever_overlap_at_k', 'returned_item_customers',
-    'scalar_subquery_filter', 'small_quantity_revenue',
-    'sole_failing_suppliers', 'sql_udf_rates', 'stream_bm25_index_gated',
-    'temperature_mixture_weights', 'top_revenue_supplier',
-    'zonemap_pruning_audit', 'zorder_layout_audit',
-    'gdpr_delete_propagation', 'epoch_shuffle_plan',
-    'equi_depth_binning', 'multi_touch_attribution',
-    'fuzzy_name_blocking', 'matryoshka_recall_audit',
-    'cusum_changepoints', 'phrase_search_indexed',
-    'proximity_search_indexed', 'bm25_index_compaction_probe',
-    'media_image_features', 'media_image_features_exact',
-    'approx_distinct_and_quantiles', 'text_stats',
-})
-
-DRIVER_SAMPLE_R07 = (
-    'mergeable_partial_aggs',
-    'array_funcs', 'bitwise_funcs', 'bm25_index_probe', 'bm25_topk',
-    'cdc_latest_state', 'conditional_funcs', 'customer_order_histogram',
-    'discount_band_revenue', 'dormant_rich_customers',
-    'heavy_shipper_suppliers', 'hybrid_rrf_topk', 'k_anonymity_audit',
-    'listagg_funcs', 'map_funcs', 'month_spine_fill',
-    'nation_market_share', 'order_priority_exists',
-    'phrase_search_top_bigram', 'pivot_event_counts',
-    'point_in_time_join', 'priority_linestatus_counts',
-    'product_type_profit', 'props_variant_extract', 'regex_funcs',
-    'retriever_overlap_at_k', 'returned_item_customers',
-    'scalar_subquery_filter', 'small_quantity_revenue',
-    'sole_failing_suppliers', 'sql_udf_rates', 'stream_bm25_index_gated',
-    'temperature_mixture_weights', 'top_revenue_supplier',
-)
-
-DRIVER_SAMPLE_R06 = (
-    # First slot: NOT a never-checked name — the one red r05 row.
-    # VERDICT r5 task #1's done-criterion is a GREEN r06 driver row
-    # for mergeable_partial_aggs (the decimal-end-to-end fix landed
-    # in 00581c1); re-sampling it is the only way the driver can
-    # issue that row. month_spine_fill moved to the r7 set to keep
-    # the sample at 50.
-    'mergeable_partial_aggs',
-    'knn_graph_mutual_capped', 'knn_cap_recall_audit',
-    'semantic_dedup_capped', 'stream_hourly_kpis_gated',
-    'stream_dedup_gated', 'stream_session_window_gated',
-    'stream_dedup_watermark_gated', 'stream_stream_join_gated',
-    'stream_matview_gated', 'stream_sessions_state_gated',
-    'stream_classifier_scores_gated', 'doc_chunks_udtf',
-    'median_value_udaf', 'token_count_pandas_udf', 'media_bytes_arrow',
-    'pyds_envelope_counts', 'pyds_stream_counts_gated',
-    'arrow_native_udf_digest', 'media_metadata', 'media_frame_fanout',
-    'media_resize', 'media_audio_windows', 'media_phash_dedup',
-    'distinct_counts', 'window_rank_variants', 'first_last_window',
-    'unpivot_order_measures', 'collect_sorted_sets',
-    'exists_correlated', 'quantity_variance_exact', 'shipping_priority',
-    'asof_prev_part_shipment', 'interval_overlap_pairs',
-    'salted_segment_revenue', 'domain_cap_sample',
-    'monthly_spine_gapfill', 'min_cost_part_supplier',
-    'nation_revenue_share', 'large_orders', 'promo_revenue_share',
-    'brand_size_supplier_counts', 'customer_order_fill',
-    'monthly_revenue_reconciliation', 'rolling_hour_user_value',
-    'lateral_top_orders', 'volume_shipping',
-    'disjunctive_predicate_revenue', 'hll_partition_merge_exact',
-    'distinct_and_quantiles_exact',
-)
-
-# r05's pinned sample, now all driver-checked (CORRECTNESS_r05.json).
-DRIVER_SAMPLE_R05 = (
-    'source_overlap_audit', 'bloom_decontamination',
-    'quality_classifier_scores', 'classifier_crossshard_eval',
-    'pagerank_trade_graph', 'jaccard_index_probe',
-    'copurchase_triangles', 'sessionize_events', 'session_window_native',
-    'ann_ivf_cells', 'ann_ivf_topk', 'ivf_recall_audit',
-    'quantity_percentiles', 'event_funnel', 'cohort_retention',
-    'label_centroids', 'ann_ivf_multiprobe', 'hourly_anomaly_flags',
-    'customer_value_segments', 'salted_event_type_stats',
-    'user_value_trend', 'user_value_trend_native',
-    'sliding_window_counts', 'pq_encode', 'ann_ivfpq_topk',
-    'ann_ivfpq_rerank_topk', 'ann_ivfpq_residual_topk',
-    'pq_encode_trained', 'sliding_window_distinct_users',
-    'semantic_dedup', 'hard_negative_mining', 'ann_ivf_index_probe',
-    'table_profile', 'dq_expectations', 'mergeable_partial_aggs',
-    'hll_partition_merge', 'cms_heavy_hitters', 'txlog_time_travel',
-    'txlog_change_data_feed', 'txlog_exactly_once_replay',
-    'pretrain_funnel', 'bigram_lm_scores', 'balanced_stratified_sample',
-    'int8_quantize_embeddings', 'length_curriculum', 'lsh_recall_audit',
-    'repetition_stats', 'dsir_importance', 'minhash_band_tuning',
-    'ccnet_buckets',
-)
+def _last_checked(paths) -> dict[str, int]:
+    """Query name -> the highest round with a CORRECTNESS row for it.
+    A failed row (any ``*_match`` False, or an ``err`` other than
+    ``no_oracle``) stamps 0, so that name is re-checked first. Missing
+    directories contribute nothing."""
+    latest: dict[str, tuple[int, bool]] = {}
+    for d in paths:
+        for p in Path(d).glob("CORRECTNESS_r*.json"):
+            m = _EVIDENCE_FILE.fullmatch(p.name)
+            if not m:
+                continue
+            rnd = int(m[1])
+            for name, row in json.loads(p.read_text()).items():
+                ok = (not any(v is False for k, v in row.items()
+                              if k.endswith("_match"))
+                      and row.get("err") in (None, "no_oracle"))
+                if rnd > latest.get(name, (0, True))[0]:
+                    latest[name] = (rnd, ok)
+    return {n: rnd if ok else 0 for n, (rnd, ok) in latest.items()}
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -362,11 +159,13 @@ def load_registry() -> dict[str, QuerySpec]:
 
     The driver's fixed-size oracle sample is the first 50 registered
     names, so after importing every module the registry is reordered
-    to put queries with NO driver-side CORRECTNESS row yet
-    (``DRIVER_CHECKED_R01_R04``) first — module-order rotation alone
-    kept re-sampling already-checked names (r04 re-checked 20).
-    Exact-set rotation reaches full 201-query driver coverage in two
-    more rounds.
+    by the committed evidence (``_last_checked`` over every
+    ``CORRECTNESS_rNN.json``): names never checked, or whose latest
+    row failed, come first; then the oldest last-checked round; ties
+    by name. Each round's sample therefore re-checks the queries with
+    the stalest evidence, and committing that round's CORRECTNESS file
+    rotates the next sample with no table to edit.
+    Without the evidence files the order is by name.
     """
     from . import curation_extra  # noqa: F401
     from . import curation_wave6  # noqa: F401
@@ -394,25 +193,8 @@ def load_registry() -> dict[str, QuerySpec]:
         spec = REGISTRY[name]
         if not spec.audit:
             REGISTRY[name] = dataclasses.replace(spec, audit=True)
-    # Sample order for round 9 (VERDICT r8 task #7: with all 249
-    # ever-green, staleness is the only driver-side risk): no pinned
-    # head (zero red r08 rows to re-queue); (1) never-checked new r9
-    # registrations first; (2) checked names, OLDEST driver evidence
-    # first (r01-r04, then r05..r08 stamps), so the 50-slot sample
-    # re-checks the 50 least-recently-driver-checked queries.
-    last_checked: dict[str, int] = {}
-    for rnd, grp in ((4, DRIVER_CHECKED_R01_R04),
-                     (5, DRIVER_SAMPLE_R05),
-                     (6, DRIVER_SAMPLE_R06),
-                     (7, DRIVER_CHECKED_R07),
-                     (8, DRIVER_CHECKED_R08)):
-        for n in grp:
-            last_checked[n] = rnd
-    ordered = sorted(
-        REGISTRY,
-        key=lambda n: (n in last_checked,
-                       last_checked.get(n, 0),
-                       n))
+    stamp = _last_checked(_EVIDENCE_DIRS)
+    ordered = sorted(REGISTRY, key=lambda n: (stamp.get(n, 0), n))
     reordered = {n: REGISTRY[n] for n in ordered}
     REGISTRY.clear()
     REGISTRY.update(reordered)

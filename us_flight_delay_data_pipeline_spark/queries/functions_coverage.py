@@ -114,12 +114,12 @@ def envelope_silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="The reference's ACTUAL bronze wire format under the oracle "
         "gate: orders → JSON-in-binary envelope → written as Avro "
-        "OBJECT CONTAINER FILES by Spark's JVM AvroFileFormat (the "
-        "avro short name when spark-avro registers it, else the class "
-        "name pyspark ships in spark-sql core; deflate, 1 MiB blocks, "
-        "one file per write task) → FileScan avro → decode + from_json "
-        "+ try_cast → aggregate. The roundtrip is an identity on the "
-        "payload, so the oracle computes the same aggregate straight "
+        "OBJECT CONTAINER FILES by Spark's JVM AvroFileFormat (named "
+        "by the class pyspark ships in spark-sql core; deflate, 1 MiB "
+        "blocks, one file per write task) → FileScan avro → decode + "
+        "from_json + try_cast → aggregate. The roundtrip is an "
+        "identity on the payload, so the oracle computes the same "
+        "aggregate straight "
         "from orders — any codec or schema-mapping defect breaks the "
         "match (ETL/flight-silver-transformation ipynb:574-578 reads "
         "Event Hubs Capture avro).",

@@ -10,26 +10,23 @@ Our engine reproduces the *data contract* — a DataFrame with a binary
   body + partition/offset/enqueued_at metadata (what the producers +
   broker did, kafka-eh/produce_to_eventhub.py:73-86).
 - ``write_envelope_bronze`` / ``read_envelope_bronze``: land/scan the
-  envelope frame. An explicit ``fmt="avro"`` writes and reads Avro
-  object container files through Spark's own JVM ``AvroFileFormat``:
-  by its ``avro`` short name when the spark-avro artifact registers
-  it, else by its class name, which pip pyspark ships in spark-sql
-  core without the registration. Either way it is the same class, a
-  codegen'd ``FileScan avro`` with no Python process. ``fmt=None``
-  picks ``avro`` when the short name is registered, else parquet
-  (same columns; the silver transform is identical).
+  envelope frame. The default ``fmt="avro"`` writes and reads Avro
+  object container files through Spark's own JVM ``AvroFileFormat``,
+  named by its class: Spark 4 ships the class in spark-sql core, but
+  pip pyspark lacks the spark-avro artifact that registers the
+  ``avro`` short name. The scan is a codegen'd ``FileScan avro`` with
+  no Python process. Any other ``fmt`` (e.g. ``"parquet"``) is passed
+  to Spark as is; the columns and the silver transform are the same.
 """
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
     "encode_envelope", "decode_envelope", "csv_to_envelope_batch",
-    "write_envelope_bronze", "read_envelope_bronze", "avro_available",
+    "write_envelope_bronze", "read_envelope_bronze",
 ]
 
 ENVELOPE_COLUMNS = ("body", "partition", "offset", "enqueued_at")
@@ -38,42 +35,6 @@ AVRO_FILE_FORMAT = "org.apache.spark.sql.avro.AvroFileFormat"
 # dictionary, and Avro's default 64,000-byte interval makes bronze ~7%
 # larger than 1 MiB blocks do.
 _AVRO_SYNC_INTERVAL = 1 << 20
-# pyspark converts the JVM errors it knows (a missing short name is an
-# AnalysisException) and re-raises the rest as Py4JJavaError
-_LOOKUP_ERRORS = (Py4JJavaError, PySparkException)
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True if the ``avro`` short name is registered. That takes the
-    separate spark-avro artifact, which pip pyspark does not bundle;
-    Spark 4 keeps ``AvroFileFormat`` itself in spark-sql core without
-    the ``DataSourceRegister`` entry, and ``fmt="avro"`` names that
-    class in full when this is False."""
-    try:
-        _lookup_data_source(spark, "avro")
-        return True
-    except _LOOKUP_ERRORS:
-        return False
-
-
-def _lookup_data_source(spark: SparkSession, name: str):
-    jvm = spark._jvm  # noqa: SLF001 — datasource-registry probe only
-    jvm.org.apache.spark.sql.execution.datasources.DataSource \
-        .lookupDataSource(name, spark._jsparkSession.sessionState().conf())
-
-
-def _avro_format(spark: SparkSession) -> str:
-    """The JVM Avro source: its short name when registered, else its
-    class name (the same class)."""
-    if avro_available(spark):
-        return "avro"
-    try:
-        _lookup_data_source(spark, AVRO_FILE_FORMAT)
-    except _LOOKUP_ERRORS as e:
-        raise RuntimeError(
-            f"Avro bronze needs the JVM class {AVRO_FILE_FORMAT}, which "
-            "this Spark cannot load") from e
-    return AVRO_FILE_FORMAT
 
 
 def encode_envelope(df: DataFrame, produced_at: bool = True) -> DataFrame:
@@ -118,20 +79,17 @@ def csv_to_envelope_batch(spark: SparkSession, csv_path: str,
 
 
 def write_envelope_bronze(df: DataFrame, path: str,
-                          fmt: str | None = None) -> None:
-    spark = df.sparkSession
-    fmt = fmt or ("avro" if avro_available(spark) else "parquet")
+                          fmt: str = "avro") -> None:
     writer = df.write.mode("overwrite")
     if fmt == "avro":
-        fmt = _avro_format(spark)
+        fmt = AVRO_FILE_FORMAT
         writer = (writer.option("compression", "deflate")
                   .option("avro.mapred.sync.interval", _AVRO_SYNC_INTERVAL))
     writer.format(fmt).save(path)
 
 
 def read_envelope_bronze(spark: SparkSession, path: str,
-                         fmt: str | None = None) -> DataFrame:
-    fmt = fmt or ("avro" if avro_available(spark) else "parquet")
+                         fmt: str = "avro") -> DataFrame:
     if fmt == "avro":
-        fmt = _avro_format(spark)
+        fmt = AVRO_FILE_FORMAT
     return spark.read.format(fmt).load(path)
