@@ -12,7 +12,10 @@ For each target it also writes ``explain("formatted")`` of its
 first-round frame to ``plans/ab/<query>_<rev>.txt``, where ``<rev>``
 is ``git describe --always --dirty`` of this checkout, so the
 before / after plans of an A/B land side by side. The plan is written
-outside the timed region.
+outside the timed region. After the timed rounds it builds each target
+once more and reports the py4j commands that build sent to the JVM as
+``<query>.py4j_calls`` (driver-side cost; builders that run actions
+count theirs too).
 
 Usage: SPARK_GRAFT_SF_DIR=... python scripts/perf_ab.py q1 [q2 ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) data directory;
@@ -33,7 +36,8 @@ sys.path.insert(0, REPO)
 from us_flight_delay_data_pipeline_spark.operators.cache import (  # noqa: E402
     release_tracked)
 from us_flight_delay_data_pipeline_spark.queries import load_registry  # noqa: E402
-from us_flight_delay_data_pipeline_spark.session import get_spark  # noqa: E402
+from us_flight_delay_data_pipeline_spark.session import (  # noqa: E402
+    count_py4j_calls, get_spark)
 
 import bench  # noqa: E402
 
@@ -82,6 +86,13 @@ def main() -> None:
                 _write_plan(df, os.path.join(plan_dir, f"{n}_{rev}.txt"))
             release_tracked()
             spark.catalog.clearCache()
+    calls = {}
+    for t in targets:
+        with count_py4j_calls() as n_calls:
+            reg[t].fn(spark, sf_dir)
+        calls[t] = n_calls[0]
+        release_tracked()
+        spark.catalog.clearCache()
     med = {n: round(statistics.median(v), 3) for n, v in times.items()}
     ref = bench.control_reference()
     sref = bench.shuffle_control_reference()
@@ -92,6 +103,7 @@ def main() -> None:
     for t in targets:
         out[t] = {"runs": times[t], "median_sec": med[t],
                   "box_normalized_sec": round(med[t] / box, 3)}
+        out[f"{t}.py4j_calls"] = calls[t]
     print(json.dumps(out))
 
 

@@ -20,6 +20,9 @@ from us_flight_delay_data_pipeline_spark.streaming.ingest import (
 
 from flight_fixtures import make_clean_rows
 
+# The test bounds its own wait: pytest-timeout is not a dependency.
+DEADLINE_S = 120
+
 
 def _serve(rows: list[dict], sock: socket.socket, done: threading.Event):
     conn, _ = sock.accept()
@@ -32,7 +35,6 @@ def _serve(rows: list[dict], sock: socket.socket, done: threading.Event):
         sock.close()
 
 
-@pytest.mark.timeout(180)
 def test_socket_json_to_silver_matches_batch(spark, tmp_path):
     rows = make_clean_rows(n=60, seed=11)
     srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
@@ -52,11 +54,16 @@ def test_socket_json_to_silver_matches_batch(spark, tmp_path):
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .start())
     try:
-        deadline = time.time() + 120
+        deadline = time.time() + DEADLINE_S
+        delivered = 0
         while time.time() < deadline:
-            if spark.table(name).count() >= len(rows):
+            delivered = spark.table(name).count()
+            if delivered >= len(rows):
                 break
             time.sleep(1)
+        else:
+            pytest.fail(f"socket stream delivered {delivered} of {len(rows)} "
+                        f"rows in {DEADLINE_S} s")
         got = spark.table(name)
         assert got.count() == len(rows)
         # equivalence with the batch silver over the same messages

@@ -333,6 +333,43 @@ def test_schema_evolution_merge_schema_read(spark, tmp_path):
     assert schemas == [2, 3]
 
 
+def _nonnull_table(spark, tmp_path):
+    from pyspark.sql.types import (IntegerType, StringType, StructField,
+                                   StructType)
+    schema = StructType([StructField("k", IntegerType(), False),
+                         StructField("v", StringType(), True)])
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame([(1, "a")], schema))
+    t.append(spark.createDataFrame([(2, None)], schema))
+    return t
+
+
+def test_snapshot_runs_no_spark_job(spark, tmp_path):
+    """The snapshot reads with the manifest's recorded schema, so
+    planning it starts no footer-reading (schema inference) job."""
+    t = _nonnull_table(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"snapshot-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        snap = t.snapshot()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(tuple(r) for r in snap.collect()) == [(1, "a"), (2, None)]
+
+
+def test_snapshot_schema_equals_parquet_inference(spark, tmp_path):
+    """The recorded schema (``k`` written non-nullable) reads back as
+    exactly what Spark's own parquet inference gives."""
+    t = _nonnull_table(spark, tmp_path)
+    recorded = json.loads(t.history()[-1]["schema"])
+    assert recorded["fields"][0]["nullable"] is False
+    dirs = [os.path.join(t.path, d) for d in t._state_at(1)[0]]
+    assert t.snapshot().schema == spark.read.parquet(*dirs).schema
+
+
 def test_restore_is_metadata_only_and_time_travelable(spark, tmp_path):
     """Delta RESTORE: reinstating an old snapshot is a new commit that
     adds the old dirs back without copying a byte; stats come along so

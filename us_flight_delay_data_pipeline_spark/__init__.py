@@ -6,7 +6,7 @@ Layout
 ------
 - ``session``    : tuned SparkSession builder (AQE, shuffle partitions).
 - ``functions``  : scalar expression library (safe_div, year_month,
-  try-cast, envelope decode/repair, text stats, vector math).
+  envelope decode/repair, text stats, vector math).
 - ``sources``    : table registry + ingestion (CSV/JSON/parquet/binary
   envelope; avro gated behind availability).
 - ``plans``      : the medallion pipeline — silver transform, gold

@@ -3,11 +3,12 @@ no UDFs in this package except where explicitly marked vectorized."""
 
 from .core import (
     safe_div,
-    year_month,
-    rowwise_total,
-    try_cast_columns,
     decode_and_repair_body,
     normalize_columns_lower,
+    safe_div_sql,
+    year_month_sql,
+    rowwise_total_sql,
+    decode_and_repair_body_sql,
 )
 from .text import (
     token_count,
@@ -27,8 +28,9 @@ from .vectors import (
 )
 
 __all__ = [
-    "safe_div", "year_month", "rowwise_total", "try_cast_columns",
-    "decode_and_repair_body", "normalize_columns_lower",
+    "safe_div", "decode_and_repair_body", "normalize_columns_lower",
+    "safe_div_sql", "year_month_sql", "rowwise_total_sql",
+    "decode_and_repair_body_sql",
     "token_count", "word_tokens", "punct_ratio", "stopword_ratio",
     "quality_score", "lang_id_heuristic", "doc_fingerprint",
     "char_ngrams", "word_ngrams",

@@ -5,19 +5,26 @@ the reference behavior it reproduces. All are native Column
 expressions — they stay inside whole-stage codegen (the reference's one
 Python UDF is deliberately replaced by native ops here, see
 ``decode_and_repair_body``).
+
+The medallion builders (``plans/``) emit one ``spark.sql`` statement
+per step instead of building Columns one py4j call at a time, so their
+formulas come as SQL text (``*_sql``). ``year_month_sql`` and
+``rowwise_total_sql`` have no Column form; ``safe_div`` and
+``decode_and_repair_body`` keep theirs for the registered queries, and
+tests/test_sql_helpers.py holds each pair equal.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "safe_div", "year_month", "rowwise_total", "try_cast_columns",
-    "decode_and_repair_body", "normalize_columns_lower", "rebalance",
-    "arr_str",
+    "safe_div", "decode_and_repair_body", "normalize_columns_lower",
+    "rebalance", "arr_str", "safe_div_sql", "year_month_sql",
+    "rowwise_total_sql", "decode_and_repair_body_sql",
 ]
 
 
@@ -62,47 +69,39 @@ def safe_div(num: Column, den: Column) -> Column:
     return F.when(den.isNull() | (den == 0), F.lit(0.0)).otherwise(num / den)
 
 
-def year_month(year: Column, month: Column) -> Column:
-    """``"YYYY-MM"`` string key, zero-padded.
+def safe_div_sql(num: str, den: str) -> str:
+    """``safe_div`` over two SQL expressions, as SQL text."""
+    return (f"CASE WHEN ({den}) IS NULL OR ({den}) = 0 THEN 0.0D "
+            f"ELSE ({num}) / ({den}) END")
+
+
+def year_month_sql(year: str, month: str) -> str:
+    """``"YYYY-MM"`` string key, zero-padded, as SQL text over two SQL
+    expressions.
 
     The GOLD_MONTHLY / GOLD_MASTER tables carry a ``year_month STRING``
     column (snowflake-wh/NB_AIRLINE_DELAY_GOLD (1).ipynb:224,368).
     """
-    return F.format_string("%04d-%02d", year.cast("int"), month.cast("int"))
+    return (f"format_string('%04d-%02d', CAST({year} AS INT), "
+            f"CAST({month} AS INT))")
 
 
-def rowwise_total(cols: Iterable[Column]) -> Column:
-    """Null-safe row-wise sum (each NULL contributes 0).
+def rowwise_total_sql(cols: Iterable[str]) -> str:
+    """Null-safe row-wise sum (each NULL contributes 0), as SQL text
+    over SQL expressions.
 
     Reproduces ``cause_total = carrier_ct + weather_ct + nas_ct +
     security_ct + late_aircraft_ct`` (README.md:182) where the
     reference's Snowflake side effectively zero-fills via TRY_CAST
     guards.
     """
-    total = F.lit(0.0)
-    for c in cols:
-        total = total + F.coalesce(c.cast("double"), F.lit(0.0))
-    return total
-
-
-def try_cast_columns(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
-    """Apply string→numeric casts with null-on-failure semantics.
-
-    The silver notebook casts 13 string columns to int/double
-    (ETL/flight-silver-transformation (1).ipynb:1234-1246); Snowflake
-    re-guards with TRY_CAST (snowflake-wh/…:510-537). With
-    ``spark.sql.ansi.enabled=false`` a plain ``cast`` already has
-    TRY_CAST semantics, but we use ``try_cast`` explicitly so the
-    behavior survives ANSI-mode clusters.
-    """
-    return df.withColumns(
-        {name: F.col(name).try_cast(dtype) for name, dtype in casts.items()}
-    )
+    return "0.0D" + "".join(
+        f" + coalesce(CAST({c} AS DOUBLE), 0.0D)" for c in cols)
 
 
 def decode_and_repair_body(body: Column) -> Column:
     """binary → UTF-8 string, truncated-JSON repair: keep the prefix
-    through the **last** ``'}'``; NULL if no ``'}'`` at all.
+    through the **last** ``'}'``; unchanged if no ``'}'`` at all.
 
     Replaces the reference's single Python UDF ``decode_and_trim_bytes``
     (ETL/flight-silver-transformation (1).ipynb:1194-1206) with native
@@ -123,6 +122,20 @@ def decode_and_repair_body(body: Column) -> Column:
     # unchanged (the fragment then fails from_json → null-drop, exactly
     # the reference's failure path).
     return F.when(rev_pos > 0, s.substr(F.lit(1), last_brace)).otherwise(s)
+
+
+def decode_and_repair_body_sql(body: str) -> str:
+    """``decode_and_repair_body`` over a SQL expression, as SQL text.
+
+    The ``'}'`` is spelled ``'\\u007D'``, so the text holds no brace and
+    goes unescaped both into ``F.expr`` and into
+    ``spark.sql(text, **kwargs)``, which formats its text by
+    ``str.format`` rules.
+    """
+    s = f"CAST({body} AS STRING)"
+    rev_pos = f"locate('\\u007D', reverse({s}))"
+    return (f"CASE WHEN {rev_pos} > 0 "
+            f"THEN substr({s}, 1, length({s}) - {rev_pos} + 1) ELSE {s} END")
 
 
 def normalize_columns_lower(df: DataFrame) -> DataFrame:

@@ -504,7 +504,10 @@ class TxTable:
         (parquet mergeSchema) — the read-side half of schema
         evolution, for tables whose commits added columns over time
         (the manifest records each commit's own schema for the
-        write-side half; absent columns read as NULL)."""
+        write-side half; absent columns read as NULL). Otherwise the
+        read takes the schema recorded at ``version`` (the latest
+        commit's that recorded one), so planning runs no Spark job; dirs
+        that lack one of its columns read it as NULL."""
         v = self._resolve_version(version, as_of_ts)
         active, schema_json, stats = self._state_at(v)
         if prune is not None and active:
@@ -525,6 +528,9 @@ class TxTable:
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        elif schema_json:
+            # the recorded schema: no footer-reading job on every read
+            reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
         return reader.parquet(
             *[os.path.join(self.path, d) for d in active])
 

@@ -27,9 +27,8 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.core import rowwise_total, safe_div, year_month
+from ..functions.core import rowwise_total_sql, safe_div_sql, year_month_sql
 from .flight_schema import CAUSE_COLUMNS
 
 __all__ = [
@@ -37,89 +36,92 @@ __all__ = [
     "gold_master", "write_gold",
 ]
 
+# Each builder is one spark.sql statement over ``{src}`` (see README
+# "Architecture"); nested SELECTs mirror the projection layers of the
+# DataFrame chain they replaced, so the optimized plans are unchanged.
+
+# KPI ratio -> numerator; the denominator is the flight count.
+_RATIOS = {"delay_rate": "arr_del15", "avg_delay_per_flight": "arr_delay",
+           "cancel_rate": "arr_cancelled", "divert_rate": "arr_diverted"}
+# The shared SUM set of the carrier/monthly grains (per DDL).
+_SUMS = {"total_arr_flights": "arr_flights", "total_arr_del15": "arr_del15",
+         "total_arr_delay_minutes": "arr_delay",
+         "total_arr_cancelled": "arr_cancelled",
+         "total_arr_diverted": "arr_diverted",
+         **{f"sum_{c}": c for c in CAUSE_COLUMNS}}
+_SUM_BLOCK = {n: f"SUM({c})" for n, c in _SUMS.items()}
+_TOTAL_OF = {c: n for n, c in _SUMS.items()}  # silver column -> its SUM
+_CAUSE_SUMS = [_TOTAL_OF[c] for c in CAUSE_COLUMNS]
+
+
+def _select_list(exprs: dict[str, str]) -> str:
+    """``expr AS name, ...`` for a {name: SQL expression} map."""
+    return ", ".join(f"{e} AS {n}" for n, e in exprs.items())
+
+
+def _pcts(causes: list[str], total: str) -> str:
+    return _select_list({f"{c}_pct": safe_div_sql(s, total)
+                         for c, s in zip(CAUSE_COLUMNS, causes)})
+
 
 def derive_kpis(silver: DataFrame) -> DataFrame:
     """Per-row KPI ratio columns (README.md:177-183)."""
-    flights = F.col("arr_flights")
-    cause_total = rowwise_total([F.col(c) for c in CAUSE_COLUMNS])
-    df = silver.withColumns({
-        "year_month": year_month(F.col("year"), F.col("month")),
-        "delay_rate": safe_div(F.col("arr_del15"), flights),
-        "avg_delay_per_flight": safe_div(F.col("arr_delay"), flights),
-        "cancel_rate": safe_div(F.col("arr_cancelled"), flights),
-        "divert_rate": safe_div(F.col("arr_diverted"), flights),
-        "cause_total": cause_total,
-    })
-    return df.withColumns({
-        f"{c}_pct": safe_div(F.col(c), F.col("cause_total")) for c in CAUSE_COLUMNS
-    })
+    ratios = _select_list({n: safe_div_sql(num, "arr_flights")
+                           for n, num in _RATIOS.items()})
+    return silver.sparkSession.sql(f"""
+        SELECT *, {_pcts(list(CAUSE_COLUMNS), "cause_total")}
+        FROM (SELECT *, {year_month_sql("year", "month")} AS year_month,
+                     {ratios},
+                     {rowwise_total_sql(CAUSE_COLUMNS)} AS cause_total
+              FROM {{src}})""", src=silver)
 
 
-def _sum_block() -> list[F.Column]:
-    """The shared SUM set used by carrier/monthly grains (per DDL)."""
-    return [
-        F.sum("arr_flights").alias("total_arr_flights"),
-        F.sum("arr_del15").alias("total_arr_del15"),
-        F.sum("arr_delay").alias("total_arr_delay_minutes"),
-        F.sum("arr_cancelled").alias("total_arr_cancelled"),
-        F.sum("arr_diverted").alias("total_arr_diverted"),
-        *[F.sum(c).alias(f"sum_{c}") for c in CAUSE_COLUMNS],
-    ]
-
-
-def _ratio_block(df: DataFrame) -> DataFrame:
-    """Ratio-of-sums KPIs over the aggregated columns (the views'
+def _grain(src: DataFrame, keys: str, aggs: dict[str, str],
+           year_month: bool = False) -> DataFrame:
+    """Carrier/monthly grain: SUM block (+ extra aggregates) per key,
+    then the ratio-of-sums KPIs over the aggregated columns (the views'
     semantics, snowflake-wh/…:442-445, 475-476, 496-500)."""
-    flights = F.col("total_arr_flights")
-    cause_total = rowwise_total([F.col(f"sum_{c}") for c in CAUSE_COLUMNS])
-    df = df.withColumns({
-        "delay_rate": safe_div(F.col("total_arr_del15"), flights),
-        "avg_delay_per_flight": safe_div(F.col("total_arr_delay_minutes"), flights),
-        "cancel_rate": safe_div(F.col("total_arr_cancelled"), flights),
-        "divert_rate": safe_div(F.col("total_arr_diverted"), flights),
-        "_cause_total": cause_total,
-    })
-    df = df.withColumns({
-        f"{c}_pct": safe_div(F.col(f"sum_{c}"), F.col("_cause_total"))
-        for c in CAUSE_COLUMNS
-    })
-    return df.drop("_cause_total")
+    grouped = f"SELECT {keys}, {_select_list(aggs)} FROM {{src}} GROUP BY {keys}"
+    cols = [keys, *aggs]
+    if year_month:
+        grouped = (f"SELECT *, {year_month_sql('year', 'month')} AS year_month"
+                   f" FROM ({grouped})")
+        cols.append("year_month")
+    ratios = _select_list({
+        n: safe_div_sql(_TOTAL_OF[num], "total_arr_flights")
+        for n, num in _RATIOS.items()})
+    return src.sparkSession.sql(f"""
+        SELECT {", ".join(cols)}, {", ".join(_RATIOS)},
+               {_pcts(_CAUSE_SUMS, "_cause_total")}
+        FROM (SELECT *, {ratios},
+                     {rowwise_total_sql(_CAUSE_SUMS)} AS _cause_total
+              FROM ({grouped}))""", src=src)
 
 
 def agg_carrier(silver_kpi: DataFrame) -> DataFrame:
     """GOLD_CARRIER: grain (carrier, carrier_name, year, month) —
     23 DDL columns + the README's avg-of-ratios kept under a
     non-conflicting name (see module docstring)."""
-    grouped = silver_kpi.groupBy("carrier", "carrier_name", "year", "month").agg(
-        *_sum_block(),
-        F.avg("delay_rate").alias("avg_delay_rate_rowmean"),
-    )
-    return _ratio_block(grouped)
+    return _grain(silver_kpi, "carrier, carrier_name, year, month", {
+        **_SUM_BLOCK, "avg_delay_rate_rowmean": "AVG(delay_rate)"})
 
 
 def agg_monthly(silver_kpi: DataFrame) -> DataFrame:
     """GOLD_MONTHLY: grain (year, month) + year_month string key —
     22 DDL columns."""
-    grouped = silver_kpi.groupBy("year", "month").agg(*_sum_block())
-    return _ratio_block(
-        grouped.withColumn("year_month", year_month(F.col("year"), F.col("month")))
-    )
+    return _grain(silver_kpi, "year, month", _SUM_BLOCK, year_month=True)
 
 
 def agg_causes(silver_kpi: DataFrame) -> DataFrame:
     """GOLD_CAUSES: grain (carrier, carrier_name, year, month) →
     5 cause sums, total_cause_minutes, 5 pct columns — 15 DDL columns."""
-    grouped = silver_kpi.groupBy("carrier", "carrier_name", "year", "month").agg(
-        *[F.sum(c).alias(f"sum_{c}") for c in CAUSE_COLUMNS],
-    )
-    grouped = grouped.withColumn(
-        "total_cause_minutes",
-        rowwise_total([F.col(f"sum_{c}") for c in CAUSE_COLUMNS]),
-    )
-    return grouped.withColumns({
-        f"{c}_pct": safe_div(F.col(f"sum_{c}"), F.col("total_cause_minutes"))
-        for c in CAUSE_COLUMNS
-    })
+    keys = "carrier, carrier_name, year, month"
+    sums = _select_list({s: _SUM_BLOCK[s] for s in _CAUSE_SUMS})
+    return silver_kpi.sparkSession.sql(f"""
+        SELECT *, {_pcts(_CAUSE_SUMS, "total_cause_minutes")}
+        FROM (SELECT *, {rowwise_total_sql(_CAUSE_SUMS)} AS total_cause_minutes
+              FROM (SELECT {keys}, {sums} FROM {{src}} GROUP BY {keys}))""",
+        src=silver_kpi)
 
 
 def gold_master(silver_kpi: DataFrame) -> DataFrame:
@@ -135,7 +137,8 @@ def gold_master(silver_kpi: DataFrame) -> DataFrame:
         "carrier_ct_pct", "weather_ct_pct", "nas_ct_pct", "security_ct_pct",
         "late_aircraft_ct_pct",
     ]
-    return silver_kpi.select(*ddl_order)
+    return silver_kpi.sparkSession.sql(
+        f"SELECT {', '.join(ddl_order)} FROM {{src}}", src=silver_kpi)
 
 
 def write_gold(df: DataFrame, path: str) -> None:

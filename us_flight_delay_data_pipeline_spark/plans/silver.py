@@ -3,8 +3,8 @@
 One pure function so the exact same logical plan serves batch
 (``spark.read``) and streaming (``foreachBatch``) — the reference ran
 this as a Databricks notebook over captured Avro
-(ETL/flight-silver-transformation (1).ipynb cells 0-10); here it is a
-five-step declarative chain with **zero Python UDFs**, so the whole
+(ETL/flight-silver-transformation (1).ipynb cells 0-10); here it is
+one five-step SQL statement with **zero Python UDFs**, so the whole
 path stays inside whole-stage codegen and the vectorized readers
 (the reference's decode UDF forced a BatchEvalPython break — we
 replace it with native expressions, SURVEY.md §2.8-F3).
@@ -13,7 +13,8 @@ Steps (each cites the reference cell it reproduces):
 1. decode+repair   — ETL/…ipynb:1194-1206, 1219  (native, not UDF)
 2. from_json parse — ETL/…ipynb:1226 (explicit 17-string schema :1172-1189)
 3. flatten struct  — ETL/…ipynb:1226-1229 (`select("data.*")`)
-4. null-drop       — ETL/…ipynb:1229 (`na.drop(subset=["year"])`)
+4. null-drop       — ETL/…ipynb:1229 (`na.drop(subset=["year"])`, here
+                     ``WHERE year IS NOT NULL``)
 5. cast ×13        — ETL/…ipynb:1234-1246 (try-cast semantics)
 """
 
@@ -22,10 +23,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.core import decode_and_repair_body, find_column_ci, try_cast_columns
-from .flight_schema import FLIGHT_PAYLOAD_SCHEMA, SILVER_CASTS
+from ..functions.core import decode_and_repair_body_sql, find_column_ci
+from .flight_schema import FLIGHT_PAYLOAD_SCHEMA, PAYLOAD_FIELDS, SILVER_CASTS
 
 __all__ = ["silver_transform", "write_silver", "write_silver_versioned"]
+
+# from_json's schema as DDL: the 17 nullable string payload fields.
+_PAYLOAD_DDL = ", ".join(f"`{f.name}` {f.dataType.simpleString().upper()}"
+                         for f in FLIGHT_PAYLOAD_SCHEMA.fields)
+# Step 5: try-cast in place, payload order kept.
+_CAST_LIST = ", ".join(
+    f"TRY_CAST({f} AS {SILVER_CASTS[f].upper()}) AS {f}" if f in SILVER_CASTS
+    else f for f in PAYLOAD_FIELDS)
 
 
 def silver_transform(bronze: DataFrame,
@@ -40,17 +49,19 @@ def silver_transform(bronze: DataFrame,
     ``keep_cols``: envelope columns to carry through the parse (the
     reference drops all broker metadata at ``select("data.*")``; the
     streaming layer needs ``enqueued_at`` for event-time windows).
+
+    One ``spark.sql`` statement, one nested SELECT per step.
     """
-    body_col = find_column_ci(bronze, "body")  # case-insensitive, raises if absent
-    parsed = (
-        bronze
-        .withColumn("body_str", decode_and_repair_body(F.col(body_col)))
-        .select(F.from_json(F.col("body_str"), FLIGHT_PAYLOAD_SCHEMA).alias("data"),
-                *keep_cols)
-        .select("data.*", *keep_cols)
-        .na.drop(subset=["year"])
-    )
-    return try_cast_columns(parsed, SILVER_CASTS)
+    body = find_column_ci(bronze, "body")  # case-insensitive, raises if absent
+    keep = "".join(f", `{c}`" for c in keep_cols)
+    body_str = decode_and_repair_body_sql(f"`{body}`")  # step 1
+    return bronze.sparkSession.sql(f"""
+        SELECT {_CAST_LIST}{keep}
+        FROM (SELECT data.*{keep}
+              FROM (SELECT from_json(body_str, '{_PAYLOAD_DDL}') AS data{keep}
+                    FROM (SELECT *, {body_str} AS body_str
+                          FROM {{src}})))
+        WHERE year IS NOT NULL""", src=bronze)
 
 
 def write_silver(df: DataFrame, path: str) -> None:

@@ -33,14 +33,17 @@ called, and its classpath is fixed.
 
 from __future__ import annotations
 
+import contextlib
+import gc
 import os
 import re
+import threading
 
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "stop_spark", "count_py4j_calls"]
 
 LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "jvm", "localfs.jar")
@@ -153,3 +156,32 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+@contextlib.contextmanager
+def count_py4j_calls():
+    """Count the py4j commands that the calling thread sends to the JVM
+    inside the block; yields a one-element list that holds the count so
+    far. Other threads' commands are not counted: py4j's finalizer
+    thread sends one release command per collected JVM-object proxy,
+    however old. gc is collected first and paused inside."""
+    from py4j.clientserver import ClientServerConnection
+    send = ClientServerConnection.send_command
+    owner = threading.get_ident()
+    count = [0]
+
+    def counting(self, command, *args, **kwargs):
+        if threading.get_ident() == owner:
+            count[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    gc.collect()
+    was_enabled = gc.isenabled()
+    gc.disable()
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
+        if was_enabled:
+            gc.enable()

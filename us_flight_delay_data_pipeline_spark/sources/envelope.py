@@ -8,7 +8,8 @@ Our engine reproduces the *data contract* — a DataFrame with a binary
 
 - ``encode_envelope``: typed rows → ``to_json(struct(*))`` →  binary
   body + partition/offset/enqueued_at metadata (what the producers +
-  broker did, kafka-eh/produce_to_eventhub.py:73-86).
+  broker did, kafka-eh/produce_to_eventhub.py:73-86), as one
+  ``spark.sql`` statement.
 - ``write_envelope_bronze`` / ``read_envelope_bronze``: land/scan the
   envelope frame. The default ``fmt="avro"`` writes and reads Avro
   object container files through Spark's own JVM ``AvroFileFormat``,
@@ -47,16 +48,14 @@ def encode_envelope(df: DataFrame, produced_at: bool = True) -> DataFrame:
     Partition/offset are synthesized deterministically (hash / row
     order) since there is no real broker locally.
     """
-    payload = df
-    if produced_at:
-        payload = payload.withColumn(
-            "produced_at", F.unix_timestamp(F.current_timestamp()))
-    return payload.select(
-        F.encode(F.to_json(F.struct(*payload.columns)), "UTF-8").alias("body"),
-        (F.abs(F.hash(*df.columns)) % 32).alias("partition"),
-        F.monotonically_increasing_id().alias("offset"),
-        F.current_timestamp().alias("enqueued_at"),
-    )
+    produced = (", unix_timestamp(current_timestamp()) AS produced_at"
+                if produced_at else "")
+    return df.sparkSession.sql(f"""
+        SELECT encode(to_json(struct(*{produced})), 'UTF-8') AS body,
+               abs(hash(*)) % 32 AS partition,
+               monotonically_increasing_id() AS offset,
+               current_timestamp() AS enqueued_at
+        FROM {{src}}""", src=df)
 
 
 def decode_envelope(df: DataFrame) -> DataFrame:
