@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 from tests.flight_fixtures import (bronze_df, dirty_bodies, encode_bodies,
                                    make_clean_rows)
+from us_flight_delay_data_pipeline_spark.plans.flight_schema import (
+    CAUSE_COLUMNS)
 from us_flight_delay_data_pipeline_spark.plans.gold import (
     agg_carrier, agg_causes, agg_monthly, derive_kpis, gold_master)
 from us_flight_delay_data_pipeline_spark.plans.silver import silver_transform
@@ -116,6 +118,76 @@ def test_views_run_and_order(silver):
     assert vols == sorted(vols, reverse=True)
     assert v_causes_pct(causes).count() == causes.count()
     assert dashboard_monthly_causes(causes).count() > 0
+
+
+def test_dashboard_monthly_causes_ignores_partition_layout(spark):
+    """The monthly cause rollup sums exactly: the same gold_causes rows
+    in three layouts collect identical rows, although 1e16 + 1.0 - 1e16
+    as doubles gives 0.0 or 1.0 depending on the addition order."""
+    cols = ["sum_" + c for c in CAUSE_COLUMNS] + ["total_cause_minutes"]
+    schema = "year int, month int, " + ", ".join(f"{c} double" for c in cols)
+    rows = [(2024, 1, *[x] * len(cols)) for x in (1e16, 1.0, -1e16)]
+    rows += [(2024, 2, *[x] * len(cols)) for x in (0.1, 0.2, 0.3)]
+    layouts = ([rows[0], rows[1], rows[2]] + rows[3:],
+               [rows[0], rows[2], rows[1]] + rows[5:2:-1])
+    got = [dashboard_monthly_causes(spark.createDataFrame(
+               spark.sparkContext.parallelize(r, n), schema)).collect()
+           for r in layouts for n in (1, 3)]
+    assert all(g == got[0] for g in got), got
+    assert got[0][0]["sum_carrier_ct"] == 1.0
+    assert got[0][1]["total_cause_minutes"] == 0.6
+    assert [f.dataType.simpleString() for f in dashboard_monthly_causes(
+        spark.createDataFrame(rows, schema)).schema.fields] == (
+        ["int", "int"] + ["double"] * len(cols))
+
+
+def _plan_nodes(plan, in_codegen=False):
+    """(node name, inside a whole-stage-codegen stage, expression text)
+    for every operator of an executed plan."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(plan.executedPlan(), in_codegen)
+        return
+    if name.startswith("WholeStageCodegen") or name == "InputAdapter":
+        yield from _plan_nodes(plan.child(), name != "InputAdapter")
+        return
+    exprs = plan.expressions()
+    yield name, in_codegen, " ".join(exprs.apply(i).toString()
+                                     for i in range(exprs.length()))
+    kids = plan.children()
+    for i in range(kids.length()):
+        yield from _plan_nodes(kids.apply(i), in_codegen)
+
+
+def test_silver_parses_each_body_once_outside_the_filter(spark):
+    """from_json is a CodegenFallback: whatever operator holds it runs
+    interpreted. Silver parses in a Generate, once per row, so the
+    null-drop cannot be pushed below the parse (which would run a
+    second, pruned from_json and a second repair in the Filter), and
+    the repair, the Filter and the try-casts stay in codegen stages."""
+    bronze = bronze_df(spark, encode_bodies(make_clean_rows(20))
+                       + dirty_bodies())
+    df = silver_transform(bronze, keep_cols=("offset",))
+    df.collect()
+    nodes = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    assert sum(t.count("from_json(") for _, _, t in nodes) == 1, nodes
+    assert not [n for n, _, t in nodes if n == "Filter" and "from_json(" in t]
+    repair = [(n, cg) for n, cg, t in nodes if "reverse(" in t]
+    assert repair and all(cg for _, cg in repair), repair
+    assert {n for n, cg, _ in nodes if cg} >= {"Filter", "Project"}
+
+
+def test_silver_keeps_a_partial_parse_with_year(spark):
+    """A body whose JSON breaks after ``year`` parses to the fields
+    before the break (from_json's partial results): the null-drop sees
+    that ``year`` and keeps the row, the rest NULL. A year-only parse
+    of the same body is NULL, so a Filter pushed below the full parse
+    would drop it."""
+    body = (b'{"year":"2021","month":"1","carrier":"AC",'
+            b'"airport":{"AFX","arr_flights":"423.00"}')
+    rows = silver_transform(bronze_df(spark, [body])).collect()
+    assert [(r.year, r.month, r.carrier, r.airport, r.arr_flights)
+            for r in rows] == [(2021, 1, "AC", None, None)]
 
 
 def test_repartition_invariance(silver):

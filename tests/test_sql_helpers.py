@@ -4,11 +4,13 @@ as Column builders (the registered queries, ``decode_envelope``) and as
 SQL text: each pair must give the same type, the same optimized
 expression and the same values. ``year_month_sql`` and
 ``rowwise_total_sql`` exist only as SQL text and are pinned to explicit
-types and values."""
+types and values. The body repair's fast path is held byte-for-byte to
+the rule it short-cuts, over fuzzed byte bodies."""
 
 from __future__ import annotations
 
 import math
+import random
 import re
 from decimal import Decimal
 
@@ -69,6 +71,16 @@ BODIES = [
     ("✈✈", "✈✈"),
     (None, None),
 ]
+# binary bodies that are not valid UTF-8 -> the repaired bytes. Spark
+# walks characters by their lead byte, so a lead byte can swallow the
+# final '}' into its character: the cut then lands before it
+# (b'}\xc3}' -> b'}'). The fast path must leave these as they were.
+INVALID_UTF8_BODIES = [
+    (b"}\xc3}", b"}"),
+    (b"a\xe2\x80}\xe2}", b"a"),
+    (b"\xe2}", b"\xe2}"),
+    (b'{"a":1}\xff}', b'{"a":1}\xff}'),
+]
 
 
 def _same(x, y) -> bool:
@@ -101,15 +113,59 @@ def test_safe_div_sql_matches_column(spark, case):
 
 @pytest.mark.parametrize("as_binary", [False, True])
 def test_decode_and_repair_body_sql_matches_column(spark, as_binary):
-    df = spark.createDataFrame([(b,) for b, _ in BODIES], "body string")
-    if as_binary:
-        df = df.select(F.col("body").cast("binary").alias("body"))
+    cases = [tuple(None if t is None else t.encode() for t in case)
+             for case in BODIES]
+    if as_binary:  # a STRING column cannot hold invalid UTF-8
+        cases += INVALID_UTF8_BODIES
+    df = spark.createDataFrame([(b,) for b, _ in cases], "body binary")
+    if not as_binary:
+        df = df.select(F.col("body").cast("string").alias("body"))
     by_sql = df.select(F.expr(decode_and_repair_body_sql("body")).alias("r"))
     _assert_pair(by_sql,
                  df.select(decode_and_repair_body(F.col("body")).alias("r")),
-                 len(BODIES))
+                 len(cases))
     assert by_sql.schema["r"].dataType == StringType()
-    assert [r.r for r in by_sql.collect()] == [want for _, want in BODIES]
+    got = [None if r.b is None else bytes(r.b) for r in by_sql.select(
+        F.col("r").cast("binary").alias("b")).collect()]
+    assert got == [want for _, want in cases]
+
+
+def _reference_repair_sql(body: str) -> str:
+    """The repair rule without the fast path, frozen as the reference
+    the fast path must equal: keep through the last '}' by
+    reverse/locate/substr."""
+    s = f"CAST({body} AS STRING)"
+    rev_pos = f"locate('\\u007D', reverse({s}))"
+    return (f"CASE WHEN {rev_pos} > 0 "
+            f"THEN substr({s}, 1, length({s}) - {rev_pos} + 1) ELSE {s} END")
+
+
+# byte classes the fuzz draws from: braces, a quote, ASCII, UTF-8 lead
+# bytes (2-, 3- and 4-byte), continuation bytes and 0xFF, which never
+# occurs in UTF-8. '}' is drawn most often so many bodies end in it.
+_FUZZ_BYTES = (b"}" * 4 + b'{"' + b"a1: " + b"\xc3\xe2\xf0"
+               + b"\x80\xa9\xbf" + b"\xff")
+
+
+def test_decode_and_repair_body_fast_path_is_exact(spark):
+    rng = random.Random(20011)
+    bodies = [bytes(rng.choice(_FUZZ_BYTES)
+                    for _ in range(rng.randint(1, 10)))
+              for _ in range(20_000)]
+    bodies += [None, b"", b"}", b"\xc3}", b"}\xc3"]
+    df = spark.createDataFrame([(b,) for b in bodies], "body binary")
+    new = f"CAST({decode_and_repair_body_sql('body')} AS BINARY)"
+    old = f"CAST({_reference_repair_sql('body')} AS BINARY)"
+    diff = df.where(f"NOT ({new} <=> {old})").select(
+        "body", F.expr(new).alias("new"), F.expr(old).alias("old"))
+    assert diff.limit(5).collect() == []
+    # the fuzz reaches both sides of the guard
+    stats = df.selectExpr(
+        "count_if(endswith(CAST(body AS STRING), '\\u007D') "
+        "AND is_valid_utf8(CAST(body AS STRING))) AS fast",
+        "count_if(endswith(CAST(body AS STRING), '\\u007D') "
+        "AND NOT is_valid_utf8(CAST(body AS STRING))) AS guarded").first()
+    assert stats.fast > 1000 and stats.guarded > 1000, stats
 
 
 @pytest.mark.parametrize("case", sorted(YEAR_MONTH))

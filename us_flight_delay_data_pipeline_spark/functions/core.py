@@ -113,6 +113,15 @@ def decode_and_repair_body(body: Column) -> Column:
     truncated flat JSON object with no closing brace yields an
     unparseable fragment → row dies downstream at the null-drop, same
     as the reference.
+
+    Fast path: a text that ends with the byte ``'}'`` and is valid
+    UTF-8 comes back unchanged, skipping the ``reverse``/``locate``/
+    ``substr`` walk that every intact body would otherwise pay. This is
+    exact: in valid UTF-8 the byte 0x7D only ever encodes ``'}'``, so
+    the last character is that ``'}'`` and the general rule keeps the
+    whole text too. Without the validity term it would not be: over
+    invalid UTF-8 Spark's character walk can swallow the final ``'}'``
+    into a lead byte's character (``b'}\xc3}'`` repairs to ``'}'``).
     """
     s = body.cast("string")
     # position of last '}' = length - locate('}', reverse) + 1; 0 if absent
@@ -121,11 +130,15 @@ def decode_and_repair_body(body: Column) -> Column:
     # '}' present → keep prefix through it; absent → pass through
     # unchanged (the fragment then fails from_json → null-drop, exactly
     # the reference's failure path).
-    return F.when(rev_pos > 0, s.substr(F.lit(1), last_brace)).otherwise(s)
+    return (F.when(s.endswith("}") & F.is_valid_utf8(s), s)
+             .when(rev_pos > 0, s.substr(F.lit(1), last_brace))
+             .otherwise(s))
 
 
 def decode_and_repair_body_sql(body: str) -> str:
-    """``decode_and_repair_body`` over a SQL expression, as SQL text.
+    """``decode_and_repair_body`` over a SQL expression, as SQL text,
+    with the same exact fast path first (see there): a valid UTF-8
+    text ending in ``'}'`` is returned as is.
 
     The ``'}'`` is spelled ``'\\u007D'``, so the text holds no brace and
     goes unescaped both into ``F.expr`` and into
@@ -134,7 +147,8 @@ def decode_and_repair_body_sql(body: str) -> str:
     """
     s = f"CAST({body} AS STRING)"
     rev_pos = f"locate('\\u007D', reverse({s}))"
-    return (f"CASE WHEN {rev_pos} > 0 "
+    return (f"CASE WHEN endswith({s}, '\\u007D') AND is_valid_utf8({s}) "
+            f"THEN {s} WHEN {rev_pos} > 0 "
             f"THEN substr({s}, 1, length({s}) - {rev_pos} + 1) ELSE {s} END")
 
 

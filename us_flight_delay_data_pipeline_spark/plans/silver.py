@@ -16,6 +16,16 @@ Steps (each cites the reference cell it reproduces):
 4. null-drop       — ETL/…ipynb:1229 (`na.drop(subset=["year"])`, here
                      ``WHERE year IS NOT NULL``)
 5. cast ×13        — ETL/…ipynb:1234-1246 (try-cast semantics)
+
+Steps 2 and 3 are one Generate, ``inline(array(from_json(...)))``.
+``from_json`` is a ``CodegenFallback``, so the operator that holds it
+runs interpreted. Written as a Project, the optimizer would also push
+the null-drop below the parse by substituting the alias, leaving an
+interpreted Filter that runs a second ``from_json`` (pruned to
+``year``) and a second repair on every row. A Generate's output stops
+that pushdown: each body is repaired once in a codegen'd Project, parsed
+once in the Generate, and the Filter and the casts above it are
+codegen'd too (plans/silver_parse/).
 """
 
 from __future__ import annotations
@@ -44,7 +54,9 @@ def silver_transform(bronze: DataFrame,
     Corrupt handling contract: truncated JSON is trimmed to its last
     ``'}'``; anything that still fails ``from_json`` parses to a NULL
     struct and dies at the null-drop on ``year`` — identical to the
-    reference's failure path.
+    reference's failure path. A body whose JSON breaks after some
+    fields parses to those fields (Spark's partial results), the rest
+    NULL, and is kept when ``year`` is among them.
 
     ``keep_cols``: envelope columns to carry through the parse (the
     reference drops all broker metadata at ``select("data.*")``; the
@@ -57,10 +69,8 @@ def silver_transform(bronze: DataFrame,
     body_str = decode_and_repair_body_sql(f"`{body}`")  # step 1
     return bronze.sparkSession.sql(f"""
         SELECT {_CAST_LIST}{keep}
-        FROM (SELECT data.*{keep}
-              FROM (SELECT from_json(body_str, '{_PAYLOAD_DDL}') AS data{keep}
-                    FROM (SELECT *, {body_str} AS body_str
-                          FROM {{src}})))
+        FROM (SELECT inline(array(from_json(body_str, '{_PAYLOAD_DDL}'))){keep}
+              FROM (SELECT *, {body_str} AS body_str FROM {{src}}))
         WHERE year IS NOT NULL""", src=bronze)
 
 

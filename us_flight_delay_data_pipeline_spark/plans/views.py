@@ -72,16 +72,17 @@ SELECT carrier, carrier_name, year, month,
 FROM {{gold_causes}}
 ORDER BY year, month, carrier"""
 
-# snowflake-wh/…:633-639: cause rollup by month.
-DASHBOARD_MONTHLY_CAUSES = """
+# snowflake-wh/…:633-639: cause rollup by month. The doubles are summed
+# as DECIMAL(38,6), as the registered queries do: decimal addition is
+# exact, so the sums do not follow the partial-aggregation order, and
+# each comes back as a DOUBLE. A NaN or infinite input has no decimal
+# and is summed as NULL.
+_CAUSE_SUMS = [f"sum_{c}" for c in CAUSE_COLUMNS] + ["total_cause_minutes"]
+DASHBOARD_MONTHLY_CAUSES = f"""
 SELECT year, month,
-       SUM(sum_carrier_ct) AS sum_carrier_ct,
-       SUM(sum_weather_ct) AS sum_weather_ct,
-       SUM(sum_nas_ct) AS sum_nas_ct,
-       SUM(sum_security_ct) AS sum_security_ct,
-       SUM(sum_late_aircraft_ct) AS sum_late_aircraft_ct,
-       SUM(total_cause_minutes) AS total_cause_minutes
-FROM {gold_causes}
+       {", ".join(f"CAST(SUM(CAST({col} AS DECIMAL(38,6))) AS DOUBLE) AS {col}"
+                  for col in _CAUSE_SUMS)}
+FROM {{gold_causes}}
 GROUP BY year, month
 ORDER BY year, month"""
 
