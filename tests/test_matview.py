@@ -11,7 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from us_flight_delay_data_pipeline_spark.streaming.matview import (
-    compact_rollup, read_rollup, stream_monthly_revenue_log)
+    compact_rollup, log_revenue_batch, read_rollup,
+    stream_monthly_revenue_log)
 
 _SCHEMA = "o_orderkey bigint, o_custkey bigint, o_totalprice double, o_orderdate timestamp_ntz"
 
@@ -48,36 +49,34 @@ def streamed(spark, sf_dir, tmp_path_factory):
     q = stream_monthly_revenue_log(src, log, str(root / "ckpt"))
     q.awaitTermination(180)
     all_df = spark.createDataFrame(rows, _SCHEMA)
-    return log, all_df
+    waves = [rows[i * third:(i + 1) * third] for i in range(3)]
+    return log, all_df, [w for w in waves if w]
 
 
 def test_view_equals_batch(spark, streamed):
-    log, all_df = streamed
+    log, all_df, _ = streamed
     assert _rows(read_rollup(spark, log)) == _rows(_batch_answer(all_df))
 
 
 def test_replay_is_idempotent(spark, streamed):
-    """Re-writing one batch's partition (what a foreachBatch replay
-    does) must leave the folded view unchanged."""
-    log, all_df = streamed
-    # materialize the partition BEFORE rewriting it (a lazy read of
-    # the path being overwritten is a read-under-write)
-    part_rows = spark.read.parquet(f"{log}/batch_id=1").collect()
-    part = spark.createDataFrame(
-        part_rows, "year int, month int, revenue_cents bigint, n_orders bigint")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (part.withColumn("batch_id", F.lit(1).cast("bigint"))
-             .write.mode("overwrite").partitionBy("batch_id").parquet(log))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Replaying batch 1 through the foreachBatch handler must
+    rewrite only its own partition, with the same rows, and leave the
+    folded view unchanged."""
+    log, all_df, waves = streamed
+    part = _rows(spark.read.parquet(f"{log}/batch_id=1"))
+    # the wave that batch 1 ingested: its partials are the partition
+    batch = [w for w in waves
+             if _rows(_batch_answer(spark.createDataFrame(w, _SCHEMA)))
+             == part]
+    assert len(batch) == 1
+    log_revenue_batch(spark.createDataFrame(batch[0], _SCHEMA), 1,
+                      log_path=log)
+    assert _rows(spark.read.parquet(f"{log}/batch_id=1")) == part
     assert _rows(read_rollup(spark, log)) == _rows(_batch_answer(all_df))
 
 
 def test_compaction_preserves_view(spark, streamed):
-    log, all_df = streamed
+    log, all_df, _ = streamed
     compact_rollup(spark, log)
     got = spark.read.parquet(log)
     assert {r["batch_id"] for r in got.select("batch_id").distinct()

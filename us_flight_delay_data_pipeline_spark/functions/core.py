@@ -16,9 +16,14 @@ tests/test_sql_helpers.py holds each pair equal.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import hashlib
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -185,5 +190,57 @@ def cleanup_at_exit(path: str) -> None:
         return
     _SCRATCH_REGISTERED.add(path)
     import atexit
-    import shutil
     atexit.register(shutil.rmtree, path, True)
+
+
+def session_scratch(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """The session-scoped scratch path
+    ``{tmp}/{prefix}_{applicationId}_{md5(sf_dir)[:12]}``, registered
+    with :func:`cleanup_at_exit`. Keyed by (sf_dir, applicationId):
+    repeated runs in one session share it, and concurrent sessions
+    against the same sf_dir get disjoint paths."""
+    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    app = spark.sparkContext.applicationId
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}_{app}_{tag}")
+    cleanup_at_exit(path)
+    return path
+
+
+_LAYOUT_MARKER = "_SUCCESS_LAYOUT"
+
+
+def publish_once(path: str, build: Callable[[str], object]) -> str:
+    """Build the layout at ``path`` once, and publish it whole.
+
+    ``build(staged)`` writes into a private ``{path}.staging.<uuid>``
+    directory; the ``_SUCCESS_LAYOUT`` marker is written last and one
+    ``os.rename`` publishes it, so no caller ever reads a half-built
+    layout. A path whose marker exists is published and is not
+    rebuilt. When another builder published first, the loser drops
+    its staging directory and uses the winner's layout (the inputs
+    are deterministic, so the two are the same). A ``build`` that
+    raises leaves no staging directory behind, and the next call
+    builds again. Both paths are removed at interpreter exit.
+
+    Readers must skip ``_``-prefixed files (Spark and
+    ``sources/pyds.py`` both do), since the marker sits beside the
+    data. Returns ``path``."""
+    marker = os.path.join(path, _LAYOUT_MARKER)
+    if os.path.exists(marker):
+        return path
+    cleanup_at_exit(path)
+    staged = f"{path}.staging.{uuid.uuid4().hex[:12]}"
+    cleanup_at_exit(staged)
+    try:
+        build(staged)
+        open(os.path.join(staged, _LAYOUT_MARKER), "w").close()
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    try:
+        os.rename(staged, path)
+    except OSError:
+        shutil.rmtree(staged, ignore_errors=True)
+        if not os.path.exists(marker):
+            raise
+    return path

@@ -30,8 +30,8 @@ Incremental ingest: a new corpus batch is one more
 ``write_bm25_batch(batch_id=N)`` call — df/stats are per-batch
 PARTIALS merged at probe time (sums of exact integers), so appending
 never rewrites existing data and a replayed batch overwrites exactly
-its own partitions (dynamic partitionOverwriteMode, the matview.py
-idempotency pattern).
+its own partitions (each write sets ``partitionOverwriteMode=dynamic``
+as a writer option, the matview.py idempotency pattern).
 
 Numeric parity: :func:`bm25_contribution` is the ONE definition of
 the scoring arithmetic — queries/retrieval.py's inline ``bm25_topk``
@@ -137,20 +137,9 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
     safe only under its ORIGINAL batch_id (that is the idempotent
     replay path). ``probe_bm25_index(validate=True)`` checks the
     invariant (SUM(n_docs) == COUNT(DISTINCT doc_id) of postings)
-    before scoring.
-
-    The writer temporarily sets the session-global
-    ``partitionOverwriteMode=dynamic`` (restored in ``finally``) —
-    concurrent writers in the SAME SparkSession during that window
-    would observe it; the engine's contract is single-writer-per-
-    session for index builds (the queries build under
-    applicationId-keyed paths, which enforces it)."""
-    spark = docs.sparkSession
+    before scoring."""
     tfdl = _tf_dl(docs, id_col, text_col).persist()
     bid = F.lit(int(batch_id)).cast("bigint")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         # repartition before the write: the build side is deliberately
         # wide (the rebalance in _tf_dl), so a direct write would emit
@@ -171,6 +160,7 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
                  .withColumn("batch_id", bid)
                  .repartition("term_bucket", "term")
                  .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("batch_id", "term_bucket")
                  .parquet(os.path.join(path, "postings")))
 
@@ -181,7 +171,9 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
             (tfdl.groupBy("term").agg(F.count("*").alias("df"))
                  .withColumn("batch_id", bid)
                  .repartition("batch_id", "term")
-                 .write.mode("overwrite").partitionBy("batch_id")
+                 .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy("batch_id")
                  .parquet(os.path.join(path, "df")))
 
         def _write_stats() -> None:
@@ -189,7 +181,9 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
                  .agg(F.count("*").alias("n_docs"),
                       F.sum("dl").alias("total_tokens"))
                  .withColumn("batch_id", bid)
-                 .write.mode("overwrite").partitionBy("batch_id")
+                 .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy("batch_id")
                  .parquet(os.path.join(path, "stats")))
 
         # The three writes are independent once tfdl is materialized,
@@ -210,7 +204,6 @@ def write_bm25_batch(docs: DataFrame, path: str, batch_id: int = 0,
     finally:
         # unpersist inside the finally: a failed write must not leak
         # the persisted tf/dl frame (ADVICE r6)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         tfdl.unpersist()
 
 
@@ -413,14 +406,14 @@ def compact_bm25_index(src: str, dst: str,
     of the compacted index is bit-identical to the multi-batch one:
     bm25_index_compaction_probe shares the inline bm25_topk oracle to
     pin exactly that. The caller owns dst staging/publish (the
-    queries use the stage + atomic-rename pattern).
+    queries use ``functions.core.publish_once``).
 
     ``spark`` is explicit because ``getActiveSession()`` is None in a
-    non-driver thread; the dst writes also pin
-    ``partitionOverwriteMode=static`` (restored after) — under an
-    inherited ``dynamic`` mode an overwrite onto a non-fresh dst
-    would silently RETAIN stale batch_id>0 partitions and the merged
-    df/stats would double-count them (ADVICE r7)."""
+    non-driver thread. Each dst write sets
+    ``partitionOverwriteMode=static`` as a writer option: without it,
+    a session-wide ``dynamic`` mode would make an overwrite onto a
+    non-fresh dst silently RETAIN stale batch_id>0 partitions, and the
+    merged df/stats would double-count them (ADVICE r7)."""
     if spark is None:
         from pyspark.sql import SparkSession
         spark = SparkSession.getActiveSession()
@@ -429,24 +422,21 @@ def compact_bm25_index(src: str, dst: str,
                 "compact_bm25_index: no active SparkSession on this "
                 "thread — pass spark= explicitly")
     zero = F.lit(0).cast("bigint")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        (spark.read.parquet(os.path.join(src, "postings"))
-              .withColumn("batch_id", zero)
-              .write.mode("overwrite").partitionBy("batch_id", "term_bucket")
-              .parquet(os.path.join(dst, "postings")))
-        (spark.read.parquet(os.path.join(src, "df"))
-              .groupBy("term").agg(F.sum("df").alias("df"))
-              .withColumn("batch_id", zero)
-              .write.mode("overwrite").partitionBy("batch_id")
-              .parquet(os.path.join(dst, "df")))
-        (spark.read.parquet(os.path.join(src, "stats"))
-              .agg(F.sum("n_docs").alias("n_docs"),
-                   F.sum("total_tokens").alias("total_tokens"))
-              .withColumn("batch_id", zero)
-              .write.mode("overwrite").partitionBy("batch_id")
-              .parquet(os.path.join(dst, "stats")))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (spark.read.parquet(os.path.join(src, "postings"))
+          .withColumn("batch_id", zero)
+          .write.mode("overwrite").option("partitionOverwriteMode", "static")
+          .partitionBy("batch_id", "term_bucket")
+          .parquet(os.path.join(dst, "postings")))
+    (spark.read.parquet(os.path.join(src, "df"))
+          .groupBy("term").agg(F.sum("df").alias("df"))
+          .withColumn("batch_id", zero)
+          .write.mode("overwrite").option("partitionOverwriteMode", "static")
+          .partitionBy("batch_id")
+          .parquet(os.path.join(dst, "df")))
+    (spark.read.parquet(os.path.join(src, "stats"))
+          .agg(F.sum("n_docs").alias("n_docs"),
+               F.sum("total_tokens").alias("total_tokens"))
+          .withColumn("batch_id", zero)
+          .write.mode("overwrite").option("partitionOverwriteMode", "static")
+          .partitionBy("batch_id")
+          .parquet(os.path.join(dst, "stats")))

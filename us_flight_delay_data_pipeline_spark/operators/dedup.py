@@ -355,14 +355,14 @@ def write_minhash_batch(docs: DataFrame, path: str, batch_id: int,
     """Append ONE corpus batch's banded signatures to the persisted
     LSH index — the incremental writer twin of
     :func:`build_minhash_index` (which overwrites the whole index).
-    Rows land in (batch_id, band)-keyed partitions under dynamic
-    partition overwrite, so a REPLAYED batch_id rewrites exactly its
-    own partitions and the writer is idempotent per batch (the
-    bm25.write_bm25_batch contract). Batches must be doc-disjoint —
-    the probe deduplicates candidate PAIRS, not documents, so a doc
-    ingested twice under different batch_ids would pair with itself.
+    Rows land in (batch_id, band)-keyed partitions written with
+    ``partitionOverwriteMode=dynamic`` as a writer option, so a
+    REPLAYED batch_id rewrites exactly its own partitions and the
+    writer is idempotent per batch (the bm25.write_bm25_batch
+    contract). Batches must be doc-disjoint — the probe deduplicates
+    candidate PAIRS, not documents, so a doc ingested twice under
+    different batch_ids would pair with itself.
     """
-    spark = docs.sparkSession
     sig = minhash_signatures(docs, coeffs, text_col, id_col, ngram)
     banded = sig.select(
         F.col(id_col).alias("corpus_id"), "hsd",
@@ -373,17 +373,14 @@ def write_minhash_batch(docs: DataFrame, path: str, batch_id: int,
                 F.col("bk.band").alias("band"),
                 F.col("bk.key").alias("key"),
                 F.lit(int(batch_id)).cast("bigint").alias("batch_id"))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                          "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         # size-adaptive file count per partition dir — see
         # build_minhash_index
         banded.repartition("band", "key") \
-              .write.mode("overwrite").partitionBy("batch_id", "band") \
-              .parquet(path)
+              .write.mode("overwrite") \
+              .option("partitionOverwriteMode", "dynamic") \
+              .partitionBy("batch_id", "band").parquet(path)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         sig.unpersist()
 
 
@@ -478,10 +475,11 @@ def build_jaccard_index(df: DataFrame, path: str, block_col: str,
     stay equi-joins on 8-byte keys and recall is exact.
 
     ``batch_id``: when set, index rows land in a ``batch_id=N``
-    partition written with mode=overwrite — under
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` a replayed
+    partition written with mode=overwrite and
+    ``partitionOverwriteMode=dynamic`` as a writer option — a replayed
     streaming batch overwrites exactly its own partition instead of
-    double-appending (the matview.py idempotency pattern); pair with
+    double-appending, and other batches' partitions stay, whatever the
+    session's mode (the matview.py idempotency pattern); pair with
     ``dedup_against_jaccard_index(..., exclude_batch_id=N)`` so a
     replay does not probe against its own rows."""
     # No tokenizing pre-filter (ngram_jaccard_pairs note): short docs
@@ -503,12 +501,12 @@ def build_jaccard_index(df: DataFrame, path: str, block_col: str,
         F.explode(F.slice("hsd", F.lit(1), prefix_len)).alias("h"))
     if batch_id is not None:
         bid = F.lit(batch_id).cast("bigint")
-        (sketch.withColumn("batch_id", bid)
-               .write.mode("overwrite").partitionBy("batch_id")
-               .parquet(os.path.join(path, "sketch")))
-        (inverted.withColumn("batch_id", bid)
-                 .write.mode("overwrite").partitionBy("batch_id")
-                 .parquet(os.path.join(path, "inverted")))
+        for name, rows in (("sketch", sketch), ("inverted", inverted)):
+            (rows.withColumn("batch_id", bid)
+                 .write.mode("overwrite")
+                 .option("partitionOverwriteMode", "dynamic")
+                 .partitionBy("batch_id")
+                 .parquet(os.path.join(path, name)))
     else:
         sketch.write.mode(mode).parquet(os.path.join(path, "sketch"))
         inverted.write.mode(mode).parquet(os.path.join(path, "inverted"))

@@ -80,16 +80,14 @@ def envelope_silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze = o.select(F.encode(payload, "UTF-8").alias("body"))
     schema = StructType([StructField(f, StringType(), True)
                          for f in ("orderkey", "status", "custkey", "totalprice")])
-    # persist() = the silver materialization point, and deliberately an
-    # optimizer barrier: without it Catalyst pushes the null-drop
-    # filter (which references the parsed struct) down through the
-    # rebalance exchange, dragging the whole encode->decode->from_json
-    # chain into the single-task scan stage — measured 4x slower.
+    # parse in a Generate, inline(array(from_json(...))), as silver
+    # does (plans/silver.py): the null-drop filter on a parsed field
+    # cannot be pushed below a Generate's output, so it stays above
+    # the rebalance exchange instead of dragging a second, pruned
+    # encode->decode->from_json chain into the single-task scan stage
     parsed = (bronze
-              .withColumn("body_str", decode_and_repair_body(F.col("body")))
-              .select(F.from_json("body_str", schema).alias("data"))
-              .select("data.*")
-              .persist())
+              .select(decode_and_repair_body(F.col("body")).alias("body_str"))
+              .select(F.inline(F.array(F.from_json("body_str", schema)))))
     silver = (parsed
               .na.drop(subset=["orderkey"])
               .withColumns({"orderkey": F.col("orderkey").try_cast("bigint"),
@@ -125,14 +123,10 @@ def envelope_silver_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Event Hubs Capture avro).",
 )
 def avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from ..functions.core import (cleanup_at_exit, decode_and_repair_body,
-                                  rebalance)
+    from ..functions.core import (decode_and_repair_body, rebalance,
+                                  session_scratch)
     from ..sources.envelope import (encode_envelope, read_envelope_bronze,
                                     write_envelope_bronze)
     o = rebalance(load_table(spark, sf_dir, "orders")).select(
@@ -140,12 +134,8 @@ def avro_bronze_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         F.format_string("%.2f", F.col("o_totalprice")).alias("totalprice"))
     env = encode_envelope(o, produced_at=False)
-    # scratch keyed by (sf_dir, applicationId): concurrent runs get
-    # disjoint paths; mode=overwrite per call, removed at exit
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"avro_bronze_{app}_{tag}")
-    cleanup_at_exit(path)
+    # per-session scratch; mode=overwrite per call, removed at exit
+    path = session_scratch(spark, sf_dir, "avro_bronze")
     write_envelope_bronze(env, path, fmt="avro")
     bronze = read_envelope_bronze(spark, path, fmt="avro")
     schema = StructType([StructField(f, StringType(), True)

@@ -18,13 +18,10 @@ double division of exact integers.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.core import publish_once, session_scratch
 from ..operators.graph import PR_QUANT, pagerank
 from ..sources.registry import load_table
 from . import register
@@ -182,11 +179,7 @@ def jaccard_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key by (sf_dir, Spark application id): two concurrent runs
     # (pytest-xdist, parallel benches) against the same sf_dir get
     # disjoint paths — no overwrite-vs-probe race on shared /tmp
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_jidx_{app}_{tag}")
-    from ..functions.core import cleanup_at_exit
-    cleanup_at_exit(path)  # session-scoped: removed at interpreter exit
+    path = session_scratch(spark, sf_dir, "sg_jidx")
     build_jaccard_index(corpus, path, block_col="lang",
                         threshold=_PROBE_T, mode="overwrite")
     return dedup_against_jaccard_index(batch, path, block_col="lang",
@@ -297,7 +290,6 @@ def _ivf_index_probe_oracle() -> str:
         "cell partitions without touching the rest.",
 )
 def ann_ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.core import cleanup_at_exit
     from ..operators.similarity import (assign_ivf_cells, build_ivf_index,
                                         probe_ivf_index)
     from .sessions_and_ann import _IVF_CENTROID_IDS
@@ -305,29 +297,10 @@ def ann_ivf_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (e.filter(F.col("vec_id").isin(*_IVF_CENTROID_IDS))
              .select(F.col("vec_id").alias("c_id"),
                      F.col("embedding").alias("cv")))
-    # disjoint scratch per (session, sf_dir): no overwrite-vs-probe
-    # race across concurrent runs; removed at interpreter exit
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_ivfidx_{app}_{tag}")
-    marker = os.path.join(path, "_SUCCESS_LAYOUT")
-    if not os.path.exists(marker):
-        # build into a private staging dir, publish with one atomic
-        # rename — no check-then-act window where a concurrent caller
-        # could probe a half-built layout or overwrite a published one
-        import shutil
-        import uuid
-        cleanup_at_exit(path)
-        staged = f"{path}.staging.{uuid.uuid4().hex[:12]}"
-        cleanup_at_exit(staged)
-        build_ivf_index(e, cent, staged)
-        open(os.path.join(staged, "_SUCCESS_LAYOUT"), "w").close()
-        try:
-            os.rename(staged, path)
-        except OSError:
-            # another builder published first; its layout is
-            # identical (same deterministic inputs) — use it
-            shutil.rmtree(staged, ignore_errors=True)
+    # built once per session, published whole (no probe ever sees a
+    # half-built layout); removed at interpreter exit
+    path = publish_once(session_scratch(spark, sf_dir, "sg_ivfidx"),
+                        lambda staged: build_ivf_index(e, cent, staged))
     q = (assign_ivf_cells(e.filter(F.col("vec_id") < 10), cent)
          .select(F.col("vec_id").alias("q_id"), "embedding", "cell"))
     return probe_ivf_index(spark, path, q, k=3)

@@ -344,40 +344,22 @@ def _shared_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     """Session-shared on-disk BM25 index over ``documents`` (two
     appended batches — the incremental-ingest shape). Keyed by
     (sf_dir, applicationId): concurrent runs get disjoint paths;
-    built ONCE per session (stage + atomic rename, the
-    ann_ivf_index_probe pattern — no half-built layout is ever
+    built ONCE per session and published whole
+    (``functions.core.publish_once`` — no half-built layout is ever
     probeable); removed at interpreter exit. Serves both the BM25
     probe and the positional phrase probe — one build, two
     workloads."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..functions.core import cleanup_at_exit
+    from ..functions.core import publish_once, session_scratch
     from ..operators.bm25 import write_bm25_batch
     docs = load_table(spark, sf_dir, "documents")
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_bm25_{app}_{tag}")
-    marker = os.path.join(path, "_SUCCESS_LAYOUT")
-    if not os.path.exists(marker):
-        import shutil
-        import uuid
-        cleanup_at_exit(path)
-        staged = f"{path}.staging.{uuid.uuid4().hex[:12]}"
-        cleanup_at_exit(staged)
+
+    def build(staged: str) -> None:
         write_bm25_batch(docs.filter(F.col("doc_id") % 4 != 0), staged,
                          batch_id=0)
         write_bm25_batch(docs.filter(F.col("doc_id") % 4 == 0), staged,
                          batch_id=1)
-        open(os.path.join(staged, "_SUCCESS_LAYOUT"), "w").close()
-        try:
-            os.rename(staged, path)
-        except OSError:
-            # another builder published first; its layout is identical
-            # (same deterministic inputs) — use it
-            shutil.rmtree(staged, ignore_errors=True)
-    return path
+
+    return publish_once(session_scratch(spark, sf_dir, "sg_bm25"), build)
 
 
 # Shared by phrase_search_top_bigram (inline scan) and
@@ -559,32 +541,18 @@ def proximity_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "history (bounding small-file count and probe-time partial "
         "merging) without a correctness re-validation. Compaction "
         "itself is one pass over the index, corpus-free; built once "
-        "per session (stage + atomic rename, applicationId-keyed "
+        "per session (staged and published whole, applicationId-keyed "
         "scratch).",
 )
 def bm25_index_compaction_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    from ..functions.core import cleanup_at_exit
+    from ..functions.core import publish_once
     from ..operators.bm25 import (compact_bm25_index, probe_bm25_index,
                                   query_terms)
     docs = load_table(spark, sf_dir, "documents")
     src = _shared_bm25_index(spark, sf_dir)
-    dst = src + "_compacted"
-    marker = os.path.join(dst, "_SUCCESS_LAYOUT")
-    if not os.path.exists(marker):
-        import shutil
-        import uuid
-        cleanup_at_exit(dst)
-        staged = f"{dst}.staging.{uuid.uuid4().hex[:12]}"
-        cleanup_at_exit(staged)
-        compact_bm25_index(src, staged, spark=spark)
-        open(os.path.join(staged, "_SUCCESS_LAYOUT"), "w").close()
-        try:
-            os.rename(staged, dst)
-        except OSError:
-            shutil.rmtree(staged, ignore_errors=True)
+    dst = publish_once(
+        src + "_compacted",
+        lambda staged: compact_bm25_index(src, staged, spark=spark))
     q = query_terms(docs.filter(F.col("doc_id") < _N_QUERY_DOCS))
     return probe_bm25_index(q, dst, k=_TOPK)
 

@@ -12,37 +12,26 @@ table, so a wrong add/remove replay, a broken time-travel resolve, or
 a double-applied replay batch all surface as a value-hash mismatch.
 
 Both queries build their TxTable idempotently in a scratch dir keyed
-by (Spark applicationId, sf_dir) — same pattern as
-`graph_and_index.jaccard_index_probe` — so repeated runs in one
-session (bench medians, driver retries) reuse the committed log, and
-concurrent sessions never race on a shared path.
+by (Spark applicationId, sf_dir) — `functions.core.session_scratch`,
+as `graph_and_index.jaccard_index_probe` uses — so repeated runs in
+one session (bench medians, driver retries) reuse the committed log,
+and concurrent sessions never race on a shared path.
 """
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register
-from ..functions.core import cleanup_at_exit
+from ..functions.core import session_scratch
 from ..operators.txlog import TxTable
 from ..sources.registry import load_table
 
 _AGG = ("CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE)"
         " AS total_price")
-
-
-def _scratch(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_tx_{kind}_{app}_{tag}")
-    cleanup_at_exit(path)  # session-scoped: removed at interpreter exit
-    return path
 
 
 def _snapshot_agg(t: TxTable, version: int) -> DataFrame:
@@ -59,7 +48,7 @@ def _ensure_tt_table(spark: SparkSession, sf_dir: str) -> TxTable:
     copy-on-write DELETE of even keys, append), built idempotently;
     a partial chain from an interrupted run is rebuilt from scratch
     (appending onto it would shift every version)."""
-    path = _scratch(spark, sf_dir, "tt")
+    path = session_scratch(spark, sf_dir, "sg_tx_tt")
     t = TxTable(spark, path)
     if t.latest_version() not in (None, 3):
         import shutil
@@ -163,7 +152,7 @@ def txlog_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the dedup check never replays the full history.",
 )
 def txlog_exactly_once_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(spark, sf_dir, "eo")
+    path = session_scratch(spark, sf_dir, "sg_tx_eo")
     t = TxTable(spark, path)
     if t.latest_version() not in (None, 2):  # interrupted build: reset
         import shutil

@@ -235,6 +235,25 @@ def media_bytes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.mapInArrow(gen, "media_id bigint, n_bytes bigint")
 
 
+def _jsonl_drop(spark: SparkSession, sf_dir: str) -> str:
+    """The session-shared JSONL envelope drop of ``documents`` (4
+    files) that both pyds queries read, built once per session and
+    published whole; registers the ``sg_jsonl_envelope`` source."""
+    from ..functions.core import publish_once, session_scratch
+    from ..sources.pyds import JsonlEnvelopeDataSource
+
+    spark.dataSource.register(JsonlEnvelopeDataSource)
+
+    def build(staged: str) -> None:
+        (load_table(spark, sf_dir, "documents")
+         .select(F.to_json(F.struct("doc_id", "lang", "source",
+                                    "n_chars")).alias("value"))
+         .repartition(4)
+         .write.mode("overwrite").text(staged))
+
+    return publish_once(session_scratch(spark, sf_dir, "sg_jsonl"), build)
+
+
 @register(
     "pyds_envelope_counts",
     """
@@ -260,35 +279,7 @@ def media_bytes_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         "performance path.",
 )
 def pyds_envelope_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..functions.core import cleanup_at_exit
-    from ..sources.pyds import JsonlEnvelopeDataSource
-    from ..sources.registry import load_table
-
-    spark.dataSource.register(JsonlEnvelopeDataSource)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_jsonl_{app}_{tag}")
-    if not os.path.isdir(path):
-        # staged build + atomic rename (same publish discipline as
-        # ann_ivf_index_probe's on-disk layout)
-        import uuid
-        staged = f"{path}.staging.{uuid.uuid4().hex[:12]}"
-        cleanup_at_exit(path)
-        cleanup_at_exit(staged)
-        (load_table(spark, sf_dir, "documents")
-         .select(F.to_json(F.struct("doc_id", "lang", "source",
-                                    "n_chars")).alias("value"))
-         .repartition(4)
-         .write.mode("overwrite").text(staged))
-        try:
-            os.rename(staged, path)
-        except OSError:
-            shutil.rmtree(staged, ignore_errors=True)
+    path = _jsonl_drop(spark, sf_dir)
     env = (spark.read.format("sg_jsonl_envelope")
            .option("path", path).load())
     return (env.groupBy("lang")
@@ -318,33 +309,12 @@ def pyds_envelope_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "processing-time.",
 )
 def pyds_stream_counts_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
     import shutil
     import tempfile
     import uuid
 
-    from ..functions.core import cleanup_at_exit
-    from ..sources.pyds import JsonlEnvelopeDataSource
-
-    spark.dataSource.register(JsonlEnvelopeDataSource)
     # share the batch query's drop dir (build if this runs first)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    app = spark.sparkContext.applicationId
-    path = os.path.join(tempfile.gettempdir(), f"sg_jsonl_{app}_{tag}")
-    if not os.path.isdir(path):
-        staged = f"{path}.staging.{uuid.uuid4().hex[:12]}"
-        cleanup_at_exit(path)
-        cleanup_at_exit(staged)
-        (load_table(spark, sf_dir, "documents")
-         .select(F.to_json(F.struct("doc_id", "lang", "source",
-                                    "n_chars")).alias("value"))
-         .repartition(4)
-         .write.mode("overwrite").text(staged))
-        try:
-            os.rename(staged, path)
-        except OSError:
-            shutil.rmtree(staged, ignore_errors=True)
+    path = _jsonl_drop(spark, sf_dir)
     src = (spark.readStream.format("sg_jsonl_envelope")
            .option("path", path).load())
     agg = (src.groupBy("lang")

@@ -37,8 +37,9 @@ and prunes index partitions by band; quality/sample are map-side.
 Exactly-once: foreachBatch may replay a batch after a crash, so every
 state/output write is idempotent per batch — seen_md5, the jaccard
 index, out_path and stats_path are all ``batch_id=N``-partitioned and
-written with dynamic partition OVERWRITE (the matview.py pattern): a
-replay rewrites exactly its own partition instead of double-appending.
+written with dynamic partition OVERWRITE, set as a writer option (the
+matview.py pattern): a replay rewrites exactly its own partition
+instead of double-appending.
 The anti-join/probe reads exclude the current batch's partition, so a
 replayed batch never matches against its own previously-persisted
 hashes or signatures (which would silently drop the whole batch).
@@ -100,6 +101,12 @@ def _stage_stats(df: DataFrame, batch_id: int, idx: int,
          .alias("n_tokens"))
 
 
+def _write_batch(df: DataFrame, path: str) -> None:
+    """Replace only the ``batch_id`` partitions ``df`` holds."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+       .partitionBy("batch_id").parquet(path))
+
+
 def run_funnel_batch(batch_df: DataFrame, batch_id: int, *,
                      state_dir: str, out_path: str, stats_path: str,
                      jaccard_threshold: float = 0.3,
@@ -111,22 +118,6 @@ def run_funnel_batch(batch_df: DataFrame, batch_id: int, *,
     Exposed at module level so tests (and backfills) can drive the
     exact code path ``foreachBatch`` runs."""
     spark = batch_df.sparkSession
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _run_batch(spark, batch_df, batch_id, state_dir=state_dir,
-                   out_path=out_path, stats_path=stats_path,
-                   jaccard_threshold=jaccard_threshold,
-                   sig_ngram=sig_ngram)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       prev_mode)
-
-
-def _run_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int, *,
-               state_dir: str, out_path: str, stats_path: str,
-               jaccard_threshold: float, sig_ngram: int) -> None:
     seen_path = os.path.join(state_dir, "seen_md5")
     index_path = os.path.join(state_dir, "jaccard_index")
     bench_path = os.path.join(state_dir, "bench_shingles")
@@ -153,9 +144,7 @@ def _run_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int, *,
     # plan reads, and a lazy re-evaluation after the write would
     # see the batch's own hashes/signatures and drop everything
     exact = exact.localCheckpoint()
-    (exact.select("h").withColumn("batch_id", bid)
-          .write.mode("overwrite").partitionBy("batch_id")
-          .parquet(seen_path))
+    _write_batch(exact.select("h").withColumn("batch_id", bid), seen_path)
 
     # -- fuzzy dedup: exact index probe, then intra-batch components
     idx = _read_or_none(spark, os.path.join(index_path, "sketch"))
@@ -206,9 +195,8 @@ def _run_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int, *,
     sampled = decontam.filter(
         h32(F.col("doc_id").cast("string")) % 100 < rate)
 
-    (sampled.select(*_DOC_COLS).withColumn("batch_id", bid)
-            .write.mode("overwrite").partitionBy("batch_id")
-            .parquet(out_path))
+    _write_batch(sampled.select(*_DOC_COLS).withColumn("batch_id", bid),
+                 out_path)
 
     stats = [
         _stage_stats(base, batch_id, 0, "base"),
@@ -224,7 +212,7 @@ def _run_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int, *,
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
-    out.write.mode("overwrite").partitionBy("batch_id").parquet(stats_path)
+    _write_batch(out, stats_path)
     for df in (base, decontam):
         df.unpersist()
 

@@ -8,8 +8,9 @@ LOG OF PARTIAL AGGREGATES instead of rescanning history.
 Design (replay-safe by construction):
 
 - each micro-batch writes its month-grain partials to
-  ``{log}/batch_id=N/`` with dynamic partition OVERWRITE — a replayed
-  batch (foreachBatch at-least-once on recovery) rewrites the same
+  ``{log}/batch_id=N/`` with dynamic partition OVERWRITE (a writer
+  option, so the session's mode is untouched) — a replayed batch
+  (foreachBatch at-least-once on recovery) rewrites the same
   partition with the same rows instead of double-counting;
 - the VIEW is ``read_rollup``: one re-aggregation of the log (tiny —
   |months| x |batches| rows, whatever the fact volume was);
@@ -30,12 +31,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-__all__ = ["stream_monthly_revenue_log", "read_rollup", "compact_rollup"]
+__all__ = ["stream_monthly_revenue_log", "log_revenue_batch", "read_rollup",
+           "compact_rollup"]
 
 _KEYS = ("year", "month")
 
@@ -49,25 +52,26 @@ def _partials(orders: DataFrame) -> DataFrame:
                        F.count("*").alias("n_orders")))
 
 
+def log_revenue_batch(batch_df: DataFrame, batch_id: int, *,
+                      log_path: str) -> None:
+    """Write one micro-batch's month-grain partials to
+    ``{log_path}/batch_id=N/``, replacing only that partition: a
+    replayed batch is idempotent. Exposed at module level so tests
+    (and backfills) drive the exact code ``foreachBatch`` runs."""
+    (_partials(batch_df)
+     .withColumn("batch_id", F.lit(batch_id).cast("bigint"))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("batch_id").parquet(log_path))
+
+
 def stream_monthly_revenue_log(orders: DataFrame, log_path: str,
                                checkpoint: str,
                                available_now: bool = True) -> StreamingQuery:
     """orders stream -> month-grain partial-aggregate log, one
-    overwritten ``batch_id`` partition per micro-batch."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                              "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (_partials(batch_df)
-             .withColumn("batch_id", F.lit(batch_id).cast("bigint"))
-             .write.mode("overwrite").partitionBy("batch_id")
-             .parquet(log_path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    writer = (orders.writeStream.foreachBatch(handle)
+    overwritten ``batch_id`` partition per micro-batch
+    (:func:`log_revenue_batch`)."""
+    writer = (orders.writeStream
+              .foreachBatch(partial(log_revenue_batch, log_path=log_path))
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
