@@ -5,8 +5,17 @@ Runs the target queries interleaved with BOTH frozen control profiles
 in one fresh-JVM session, cold runs (release_tracked + clearCache
 between every run — the bench.py methodology), and prints one JSON
 line with raw runs, medians, session control factors and
-box-normalized seconds. Run it once per checkout (before / after a
-change) and compare the box-normalized medians.
+box-normalized seconds.
+
+An A/B is several interleaved runs of this script in two checkouts
+(before / after a change), alternating which checkout runs first, and
+compares the per-run medians of the two sides. The box factor does not
+cancel host load: the normalized medians of one run per side cannot
+resolve differences under ~30%. Each target also reports
+``<query>.jobs``, the median number of Spark jobs per timed run,
+counted by a job group set around each run: far steadier than time
+where a change alters how many jobs a query starts, though some
+queries still differ by one job between sessions.
 
 For each target it also writes ``explain("formatted")`` of its
 first-round frame to ``plans/ab/<query>_<rev>.txt``, where ``<rev>``
@@ -75,13 +84,19 @@ def main() -> None:
 
     names = targets + CONTROLS
     times = {n: [] for n in names}
+    jobs = {n: [] for n in targets}
+    sc = spark.sparkContext
     for rnd in range(rounds):
         for n in names:
-            spark.sparkContext.setJobDescription(f"ab:{n}:r{rnd}")
+            group = f"ab:{n}:r{rnd}"
+            sc.setJobGroup(group, group)
             t0 = time.time()
             df = reg[n].fn(spark, sf_dir)
             bench.materialize(df)
             times[n].append(round(time.time() - t0, 3))
+            if n in targets:
+                jobs[n].append(
+                    len(sc.statusTracker().getJobIdsForGroup(group)))
             if rnd == 0 and n in targets:
                 _write_plan(df, os.path.join(plan_dir, f"{n}_{rev}.txt"))
             release_tracked()
@@ -104,6 +119,7 @@ def main() -> None:
         out[t] = {"runs": times[t], "median_sec": med[t],
                   "box_normalized_sec": round(med[t] / box, 3)}
         out[f"{t}.py4j_calls"] = calls[t]
+        out[f"{t}.jobs"] = statistics.median(jobs[t])
     print(json.dumps(out))
 
 

@@ -1,11 +1,13 @@
 """k-means invariants: inertia is monotonically non-increasing across
 Lloyd iterations (the defining property), assignments are total and
-deterministic, and training improves over the fixed-vector init."""
+deterministic, training improves over the fixed-vector init, and the
+fit equals a plain numpy Lloyd loop."""
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -48,3 +50,34 @@ def test_assignment_total_and_deterministic(spark, corpus, init):
 def test_converged_fit_stops_early(spark, corpus, init):
     _, hist = kmeans_fit(corpus, init, max_iter=10, tol=0.01)
     assert len(hist) < 10  # the tolerance gate fires before max_iter
+
+
+def _numpy_lloyd(x, cent, rounds):
+    """Reference Lloyd loop under kmeans_fit's rules: squared distances
+    summed dimension by dimension in order (as the Spark fold does),
+    argmin ties to the lowest c_id, an empty cluster keeps its
+    centroid."""
+    history = []
+    for _ in range(rounds):
+        d = np.zeros((len(x), len(cent)))
+        for j in range(x.shape[1]):
+            d = d + (x[:, None, j] - cent[None, :, j]) ** 2
+        a = d.argmin(axis=1)  # first minimum: rows are in c_id order
+        history.append(d[np.arange(len(x)), a].sum())
+        cent = np.array([x[a == c].mean(axis=0) if (a == c).any()
+                         else cent[c] for c in range(len(cent))])
+    return cent, history
+
+
+def test_fit_matches_numpy_lloyd(spark, corpus, init):
+    cent, hist = kmeans_fit(corpus, init, max_iter=3)
+    rows = corpus.select("embedding").collect()
+    x = np.array([r.embedding for r in rows], dtype=np.float64)
+    init_rows = sorted(init.collect(), key=lambda r: r.c_id)
+    c0 = np.array([r.cv for r in init_rows], dtype=np.float64)
+    want_cent, want_hist = _numpy_lloyd(x, c0, 3)
+    got = sorted(cent.collect(), key=lambda r: r.c_id)
+    assert [r.c_id for r in got] == [r.c_id for r in init_rows]
+    np.testing.assert_allclose(hist, want_hist, rtol=1e-9, atol=0)
+    np.testing.assert_allclose(np.array([r.cv for r in got]), want_cent,
+                               rtol=1e-9, atol=0)

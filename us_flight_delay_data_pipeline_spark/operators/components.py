@@ -14,12 +14,9 @@ one min-aggregate — both on 16-byte (node, label) pairs, never text.
 
 100 TB posture:
 - the edge list is symmetrized once and cached; per-round state is
-  two longs per node;
-- ``localCheckpoint`` after every round truncates the lineage so the
-  plan does not grow linearly with iterations (classic iterative-
-  algorithm failure mode on Spark);
-- convergence is detected with an aggregate (count of changed
-  labels), not a collect;
+  two longs per node, cut each round by ``ckpt.fixpoint``;
+- convergence is detected with an observed aggregate (count of
+  changed labels) riding the round's checkpoint job, not a collect;
 - for adversarial high-diameter graphs switch to the large-star /
   small-star formulation (Kiveris et al., "Connected Components in
   MapReduce and Beyond", SoCC'14) which converges in O(log² n) —
@@ -29,29 +26,13 @@ one min-aggregate — both on 16-byte (node, label) pairs, never text.
 
 from __future__ import annotations
 
-import itertools
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
-
-# Spark's Observation listener matches completed executions by metric
-# name; a per-round-index name (cc_round_0) collides when two
-# invocations of the same operator run concurrently in one session
-# (e.g. a streaming funnel batch plus an ad-hoc query) and can
-# cross-deliver convergence metrics between them. A process-wide
-# monotonically increasing id makes every observation name unique.
-_OBS_ID = itertools.count()
+from .ckpt import ConvergenceError, fixpoint
 
 __all__ = ["connected_components", "connected_components_star",
-           "connected_components_auto"]
-
-
-class ConvergenceError(RuntimeError):
-    """An iterative operator exhausted its round budget before its
-    convergence criterion held. Distinct from RuntimeError so auto-
-    fallback wrappers do not mask unrelated runtime failures."""
+           "connected_components_auto", "ConvergenceError"]
 
 
 def connected_components_auto(edges: DataFrame, src: str = "src",
@@ -93,63 +74,37 @@ def connected_components(edges: DataFrame, src: str = "src",
     sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
             .distinct()
             .persist())
-    # Round 1 needs no join: every node's first label is
-    # min(self, neighbors), computable straight off the edge list.
-    labels = (sym.groupBy(F.col("a").alias("node"))
-                 .agg(F.min("b").alias("nmin"))
-                 .select("node", F.least("node", "nmin").alias("component"))
-                 .localCheckpoint(eager=True))
-    labels_ids = checkpoint_rdd_ids(labels)
-    converged = False
-    for i in range(max_iter):
+
+    def propagate(labels, observe):
+        if labels is None:
+            # Round 0 needs no join: every node's first label is
+            # min(self, neighbors), computable straight off the edge list.
+            return (sym.groupBy(F.col("a").alias("node"))
+                       .agg(F.min("b").alias("nmin"))
+                       .select("node",
+                               F.least("node", "nmin").alias("component")))
         neighbor_min = (sym.join(labels, sym["b"] == labels["node"])
                            .groupBy(F.col("a").alias("node"))
                            .agg(F.min("component").alias("neighbor_min")))
-        # Fold the neighbor minimum in with a left join and carry a
-        # per-node `changed` flag. Convergence detection rides the
-        # checkpoint materialization itself via observe() metrics —
-        # zero extra job per round (a separate .count(), even over
-        # checkpointed blocks, paid one full job-scheduling round
-        # trip per iteration).
-        obs = Observation(f"cc_round_{i}_{next(_OBS_ID)}")
-        new_state = (labels.join(neighbor_min, "node", "left")
-                           .select("node",
-                                   F.least("component",
-                                           F.coalesce("neighbor_min",
-                                                      "component"))
-                                    .alias("component"),
-                                   (F.col("neighbor_min")
-                                    < F.col("component")).alias("changed"))
-                           .observe(obs, F.sum(F.col("changed").cast("int"))
-                                          .alias("n_changed"))
-                           .localCheckpoint(eager=True))
-        new_ids = checkpoint_rdd_ids(new_state)
-        # new_state is materialized (eager); round N-1's checkpoint
-        # blocks are dead — free them now instead of waiting for GC
-        # (storage stays O(1) in rounds; see operators/ckpt.py)
-        release_local_checkpoint(labels, owned=labels_ids)
-        labels = new_state.select("node", "component")
-        labels_ids = new_ids
-        if not obs.get["n_changed"]:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        # Returning here would emit labels that are NOT component
-        # minima (a path longer than max_iter rounds is still mid-
-        # propagation) — silently-wrong clusters. Fail loudly; the
-        # caller either raises max_iter or switches to the O(log^2 n)
-        # star formulation, whose rounds scale with log(diameter).
-        # Free the final round's checkpoint blocks first —
-        # clearCache() does not touch raw RDD checkpoint blocks, so
-        # without this the auto-fallback's star run would sit on top
-        # of a session-lifetime storage leak.
-        release_local_checkpoint(labels, owned=labels_ids)
-        raise ConvergenceError(
-            f"connected_components did not converge in {max_iter} "
-            f"rounds (graph diameter exceeds max_iter); use "
-            f"connected_components_star for high-diameter graphs")
-    return labels
+        new = (labels.join(neighbor_min, "node", "left")
+                     .select("node",
+                             F.least("component",
+                                     F.coalesce("neighbor_min", "component"))
+                              .alias("component"),
+                             (F.col("neighbor_min")
+                              < F.col("component")).alias("changed")))
+        return observe(new, F.sum(F.col("changed").cast("int"))
+                            .alias("n_changed"))
+
+    # Not converging raises: labels of a path longer than max_iter
+    # rounds are still mid-propagation, i.e. silently-wrong clusters.
+    try:
+        labels = fixpoint(None, propagate, max_iter=max_iter,
+                          until=lambda prev, new, m:
+                          prev is not None and not m["n_changed"])
+    finally:
+        sym.unpersist()
+    return labels.select("node", "component")
 
 
 def connected_components_star(edges: DataFrame, src: str = "src",
@@ -181,22 +136,13 @@ def connected_components_star(edges: DataFrame, src: str = "src",
     clusters are small and dense (typical near-dup corpora).
     """
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # node set BEFORE dropping self-loops: a node whose only edge is
-    # (n, n) is still its own singleton component — matching
-    # connected_components' contract over its symmetrized edge set
-    all_nodes = (e0.select(F.col("a").alias("node"))
-                   .union(e0.select(F.col("b").alias("node")))
-                   .distinct().persist())
     e = e0.filter(F.col("a") != F.col("b"))
-    # canonical undirected pair set (x < y)
-    pairs = (e.select(F.least("a", "b").alias("x"),
-                      F.greatest("a", "b").alias("y"))
-              .distinct().localCheckpoint(eager=True))
-    pairs_ids = checkpoint_rdd_ids(pairs)
 
-    converged = False
-    prev_count = pairs.count()
-    for i in range(max_iter):
+    def star_round(pairs, observe):
+        if pairs is None:  # round 0: canonical undirected pair set (x < y)
+            ss = e.select(F.least("a", "b").alias("x"),
+                          F.greatest("a", "b").alias("y")).distinct()
+            return observe(ss, F.count(F.lit(1)).alias("cnt"))
         sym = pairs.select(F.col("x").alias("u"), F.col("y").alias("v")) \
                    .union(pairs.select(F.col("y").alias("u"),
                                        F.col("x").alias("v")))
@@ -216,59 +162,43 @@ def connected_components_star(edges: DataFrame, src: str = "src",
         # u and its smaller neighbors all rewire to their minimum
         down = ls.select(F.col("y").alias("u"), F.col("x").alias("v"))
         smins = down.groupBy("u").agg(F.min("v").alias("m"))
-        obs = Observation(f"star_round_{i}_{next(_OBS_ID)}")
         ss = (down.join(smins, "u")
                   .select(F.col("v").alias("n"), "m")
                   .union(smins.select(F.col("u").alias("n"), "m"))
                   .filter(F.col("n") != F.col("m"))
                   .select(F.least("n", "m").alias("x"),
                           F.greatest("n", "m").alias("y"))
-                  .distinct()
-                  .observe(obs, F.count(F.lit(1)).alias("cnt"))
-                  .localCheckpoint(eager=True))
-        # Fixpoint test: both sides are DISTINCT canonical (x<y) sets,
-        # so |ss| == |pairs| plus ss\pairs == ∅ implies equality. The
-        # count rides the checkpoint materialization via observe()
-        # (zero extra job), and on every shrinking round it already
-        # proves "changed" — the anti-join (the expensive half) runs
-        # only on the one round where counts first agree, not 2× per
-        # round.
-        ss_ids = checkpoint_rdd_ids(ss)
-        ss_count = obs.get["cnt"]
-        if ss_count == prev_count and \
-                ss.join(pairs, ["x", "y"], "left_anti").count() == 0:
-            release_local_checkpoint(pairs, owned=pairs_ids)
-            pairs, pairs_ids = ss, ss_ids
-            converged = True
-            break
-        prev_count = ss_count
-        # round N-1's edge-set checkpoint is dead (ss is materialized
-        # and the fixpoint test above already ran) — free its blocks
-        # so storage stays O(1) in rounds (the 18-62s in-session
-        # spread of dedup_clusters_star traced to this accumulation)
-        release_local_checkpoint(pairs, owned=pairs_ids)
-        pairs, pairs_ids = ss, ss_ids
-    if not converged:
-        # The label-extraction step below assumes a star forest; a
-        # non-fixpoint edge set can put one node on the y side of two
-        # different edges and emit conflicting (node, component) rows.
-        # O(log^2 n) rounds bounds any graph, so hitting this means
-        # max_iter was set far too low — raise rather than return
-        # possibly-inconsistent labels.
-        all_nodes.unpersist()
-        # last round's blocks; see above
-        release_local_checkpoint(pairs, owned=pairs_ids)
-        raise ConvergenceError(
-            f"connected_components_star did not reach an edge-set "
-            f"fixpoint in {max_iter} rounds; raise max_iter "
-            f"(O(log^2 n) rounds suffice for any graph)")
+                  .distinct())
+        return observe(ss, F.count(F.lit(1)).alias("cnt"))
+
+    counts: list[int] = []
+
+    def fixed(prev, new, m):
+        # Both sides are DISTINCT canonical (x<y) sets, so |new| ==
+        # |prev| plus new\prev == ∅ implies equality. The counts ride
+        # the checkpoint jobs, and on every shrinking round they already
+        # prove "changed" — the anti-join (the expensive half) runs only
+        # on the round where counts first agree, not 2× per round.
+        counts.append(m["cnt"])
+        return (len(counts) > 1 and counts[-1] == counts[-2]
+                and new.join(prev, ["x", "y"], "left_anti").count() == 0)
+
+    # The label extraction below assumes a star forest: a non-fixpoint
+    # edge set can put one node on the y side of two edges and emit
+    # conflicting (node, component) rows, so not converging raises.
+    pairs = fixpoint(None, star_round, max_iter=max_iter, until=fixed)
 
     # fixpoint is a star forest: every y's single partner is its
-    # component min; centers (never on the y side) label themselves
+    # component min; centers (never on the y side) label themselves.
+    # The node set is taken BEFORE dropping self-loops: a node whose
+    # only edge is (n, n) is still its own singleton component —
+    # matching connected_components' contract over its symmetrized
+    # edge set.
+    all_nodes = (e0.select(F.col("a").alias("node"))
+                   .union(e0.select(F.col("b").alias("node")))
+                   .distinct())
     labels = pairs.select(F.col("y").alias("node"),
                           F.col("x").alias("component"))
     centers = (all_nodes.join(labels, "node", "left_anti")
                         .select("node", F.col("node").alias("component")))
-    out = labels.union(centers)
-    all_nodes.unpersist()
-    return out
+    return labels.union(centers)

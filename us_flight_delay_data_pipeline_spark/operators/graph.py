@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import track
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
+from .ckpt import fixpoint
 
 __all__ = ["pagerank", "triangle_count", "triangles_per_node",
            "label_propagation", "kcore_peel", "PR_QUANT"]
@@ -69,60 +69,53 @@ def pagerank(edges: DataFrame, iterations: int = 3,
                   .union(e.select(F.col("dst").alias("node")))
                   .distinct())
     nodes = nodes.persist()
-    n_total = nodes.count()
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # (src, dst, deg) — reused every iteration; the degree table is
-    # |nodes|-sized, so it broadcasts into the edge list map-side
-    small = n_total <= 5_000_000
-    # lazy persist: adj is consumed exactly once per iteration, so the
-    # first iteration's checkpoint job materializes the cache in-line —
-    # an explicit adj.count() here was one whole extra pass (r10 audit:
-    # actions per pagerank call = 1 setup count + iterations, nothing
-    # per-round beyond the checkpoint itself)
-    adj = e.join(F.broadcast(deg) if small else deg, "src").persist()
+    adj = None
+    try:
+        n_total = nodes.count()
+        deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+        # (src, dst, deg) — reused every iteration; the degree table is
+        # |nodes|-sized, so it broadcasts into the edge list map-side
+        small = n_total <= 5_000_000
+        # lazy persist: adj is consumed exactly once per iteration, so
+        # the first iteration's checkpoint job materializes the cache
+        # in-line — an explicit adj.count() here was one whole extra
+        # pass (r10 audit: actions per pagerank call = 1 setup count +
+        # iterations, nothing per-round beyond the checkpoint itself)
+        adj = e.join(F.broadcast(deg) if small else deg, "src").persist()
+        teleport = (1.0 - damping) / n_total
 
-    teleport = (1.0 - damping) / n_total
-    # the rank vector is |nodes|-sized — when it fits a broadcast,
-    # joining it INTO the (much larger) edge list map-side removes
-    # the per-iteration edge shuffle entirely; past that size the
-    # join falls back to hash-partitioning both sides on src
-    ranks = nodes.select("node", F.lit(1.0 / n_total).alias("rank"))
-    # Ownership rule for checkpoint release: only free checkpoints
-    # THIS loop created, enforced mechanically by recording each new
-    # checkpoint's RDD ids (operators/ckpt.py). The iteration-0
-    # `ranks` is the un-checkpointed nodes projection — sweeping its
-    # LogicalRDD leaves would free a caller-supplied localCheckpoint-
-    # backed `edges`/`nodes` irrecoverably (lineage is truncated; no
-    # recompute possible).
-    prev_ckpt: DataFrame | None = None
-    prev_ids: frozenset[int] = frozenset()
-    for _ in range(iterations):
-        units = F.floor((F.col("rank") / F.col("deg")) * F.lit(PR_QUANT)) \
-                 .cast("decimal(38,0)")
-        rside = F.broadcast(ranks) if small else ranks
-        contrib = (adj.join(rside, adj.src == ranks.node)
-                      .select(F.col("dst").alias("node"), units.alias("u")))
-        summed = contrib.groupBy("node").agg(
-            (F.lit(teleport)
-             + F.lit(damping)
-             * (F.sum("u").cast("double") / F.lit(PR_QUANT))).alias("rank"))
-        if complete_inedges:
-            # every node received mass — the agg IS the rank vector
-            new_ranks = summed
-        else:
+        def rank_round(ranks, _observe):
+            units = F.floor((F.col("rank") / F.col("deg"))
+                            * F.lit(PR_QUANT)).cast("decimal(38,0)")
+            # the rank vector is |nodes|-sized — when it fits a
+            # broadcast, joining it INTO the (much larger) edge list
+            # map-side removes the per-iteration edge shuffle entirely;
+            # past that size the join falls back to hash-partitioning
+            # both sides on src
+            rside = F.broadcast(ranks) if small else ranks
+            contrib = (adj.join(rside, adj.src == ranks.node)
+                          .select(F.col("dst").alias("node"),
+                                  units.alias("u")))
+            summed = contrib.groupBy("node").agg(
+                (F.lit(teleport)
+                 + F.lit(damping)
+                 * (F.sum("u").cast("double") / F.lit(PR_QUANT)))
+                .alias("rank"))
+            if complete_inedges:
+                # every node received mass — the agg IS the rank vector
+                return summed
             # nodes with no in-edges fall back to the teleport term
-            new_ranks = (nodes.join(summed, "node", "left")
-                              .select("node",
-                                      F.coalesce("rank", F.lit(teleport))
-                                       .alias("rank")))
-        new_ranks = new_ranks.localCheckpoint()  # truncate per-iter lineage
-        new_ids = checkpoint_rdd_ids(new_ranks)
-        # superseded OWNED round only (id-tracked, ckpt.py)
-        release_local_checkpoint(prev_ckpt, owned=prev_ids)
-        prev_ckpt, prev_ids = new_ranks, new_ids
-        ranks = new_ranks
-    e.unpersist(); nodes.unpersist(); adj.unpersist()
-    return ranks
+            return (nodes.join(summed, "node", "left")
+                         .select("node", F.coalesce("rank", F.lit(teleport))
+                                          .alias("rank")))
+
+        ranks = nodes.select("node", F.lit(1.0 / n_total).alias("rank"))
+        return fixpoint(ranks, rank_round, max_iter=iterations)
+    finally:
+        e.unpersist()
+        nodes.unpersist()
+        if adj is not None:
+            adj.unpersist()
 
 
 def _canonical_edges_and_degrees(edges: DataFrame, a: str,
@@ -331,23 +324,38 @@ def kcore_peel(edges: DataFrame, k: int = 3,
     The survivor set shrinks monotonically, so restricting the
     original adjacency to keep_r equals restricting the previous
     round's live edges — the chain collapses, and the only state
-    carried between rounds is the (tiny) survivor node set, persisted
-    and materialized per round to cut lineage replay (an unpersisted
-    round chain re-executes the upstream edge build per CONSUMER —
-    2^rounds scans; measured 18 s -> 2.4 s at sf0.1). The adjacency
-    is scanned once per round from cache; a many-round variant on a
-    fast-shrinking graph would persist the shrinking edge list
-    instead — at 4 bounded rounds the cached-scan trade wins.
+    carried between rounds is the (tiny) survivor node set, cut per
+    round to stop lineage replay (an uncut round chain re-executes the
+    upstream edge build per CONSUMER — 2^rounds scans; measured 18 s
+    -> 2.4 s at sf0.1). The adjacency is scanned once per round from
+    cache; a many-round variant on a fast-shrinking graph would persist
+    the shrinking edge list instead — at 4 bounded rounds the
+    cached-scan trade wins. Monotone shrinking also means a round that
+    keeps as many survivors as the one before keeps the same set, and
+    every later round is a no-op: the peel stops there.
     """
     bi = _bidirectional(edges, a, b)
-    deg = bi.groupBy("src").agg(F.count("*").alias("d"))
-    for _ in range(rounds):
-        keep = track(deg.filter(F.col("d") >= k).select("src")
-                        .persist())
-        keep.count()  # materialize: keep_r has two consumers below
-        live = (bi.join(keep, "src", "leftsemi")
-                  .join(keep.select(F.col("src").alias("dst")),
-                        "dst", "leftsemi"))
-        deg = live.groupBy("src").agg(F.count("*").alias("d"))
+
+    def degrees(keep):
+        live = bi if keep is None else (
+            bi.join(keep, "src", "leftsemi")
+              .join(keep.select(F.col("src").alias("dst")), "dst",
+                    "leftsemi"))
+        return live.groupBy("src").agg(F.count("*").alias("d"))
+
+    def peel(keep, observe):
+        return observe(degrees(keep).filter(F.col("d") >= k).select("src"),
+                       F.count(F.lit(1)).alias("n"))
+
+    counts: list[int] = []
+
+    def settled(prev, new, m):
+        # a spent budget is a normal stop (fixed-round contract), not a
+        # ConvergenceError
+        counts.append(m["n"])
+        return (len(counts) == rounds
+                or len(counts) > 1 and counts[-1] == counts[-2])
+
+    deg = degrees(fixpoint(None, peel, max_iter=rounds - 1, until=settled))
     return deg.select(F.col("src").alias("node"),
                       F.col("d").cast("bigint").alias("d"))

@@ -8,9 +8,9 @@ as the rest of the engine:
   window (one shuffle on vec_id — the centroid table is k rows, so
   broadcast is always right at any corpus size);
 - update: posexplode to (cluster, dim, value) → groupBy mean (one
-  shuffle of 20-byte rows; never collects vectors);
-- lineage is cut per iteration with localCheckpoint (same iterative-
-  algorithm hygiene as operators/components.py).
+  shuffle of 20-byte rows; never collects vectors); the inertia is
+  observed on the assignment inside the same job, so a round is one
+  pass over the corpus.
 
 At 100 TB: both shuffles scale linearly in corpus size × dim; k and
 iterations multiply constant factors only. For huge k, swap the
@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .ckpt import checkpoint_rdd_ids, release_local_checkpoint
+from .ckpt import fixpoint
 
 __all__ = ["kmeans_fit", "assign_clusters", "inertia"]
 
@@ -65,12 +65,13 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
     Deterministic: fixed init, argmin tie-breaks on c_id, means from
     posexplode + avg (empty clusters keep their previous centroid).
     """
-    cent = init_centroids.select("c_id", "cv").localCheckpoint(eager=True)
-    cent_ids = checkpoint_rdd_ids(cent)
     history: list[float] = []
-    for _ in range(max_iter):
-        assigned = assign_clusters(corpus, cent, vec_col, id_col)
-        history.append(inertia(assigned))
+
+    def lloyd(cent, observe):
+        if cent is None:
+            return init_centroids.select("c_id", "cv")
+        assigned = observe(assign_clusters(corpus, cent, vec_col, id_col),
+                           F.sum("sq_dist").alias("inertia"))
         means = (assigned.select("c_id", F.posexplode(vec_col)
                                  .alias("dim", "v"))
                  .groupBy("c_id", "dim")
@@ -79,13 +80,16 @@ def kmeans_fit(corpus: DataFrame, init_centroids: DataFrame,
                  .agg(F.transform(
                      F.array_sort(F.collect_list(F.struct("dim", "m"))),
                      lambda s: s["m"]).alias("cv_new")))
-        new_cent = (cent.join(means, "c_id", "left")
-                    .select("c_id", F.coalesce("cv_new", "cv").alias("cv"))
-                    .localCheckpoint(eager=True))
-        new_ids = checkpoint_rdd_ids(new_cent)
-        # superseded round, O(1) storage; owned ids only (ckpt.py)
-        release_local_checkpoint(cent, owned=cent_ids)
-        cent, cent_ids = new_cent, new_ids
-        if len(history) >= 2 and history[-2] - history[-1] <= tol * abs(history[-2]):
-            break
-    return cent, history
+        return (cent.join(means, "c_id", "left")
+                .select("c_id", F.coalesce("cv_new", "cv").alias("cv")))
+
+    def stalled(prev, new, m):
+        # round 0 (the init cut) assigns nothing; a spent budget is a
+        # normal stop here, not a ConvergenceError
+        if prev is not None:
+            history.append(m["inertia"])
+        return len(history) == max_iter or (
+            len(history) >= 2
+            and history[-2] - history[-1] <= tol * abs(history[-2]))
+
+    return fixpoint(None, lloyd, max_iter=max_iter, until=stalled), history
